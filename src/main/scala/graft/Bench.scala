@@ -68,8 +68,9 @@ object Bench {
     // experiment knob: measure AQE's per-query replan overhead on tiny data
     sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
       spark.conf.set("spark.sql.adaptive.enabled", v))
-    // A/B experiments without recompiling (BenchOne's knob, same syntax):
+    // A/B experiments on Spark confs without recompiling:
     // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — dev-only, the driver never sets it.
+    // (Time one query with SPARK_GRAFT_ONLY='^name$'.)
     // The applied string is stamped into the artifact (extra_conf below) so
     // an A/B run stays distinguishable from a clean run when re-adjudicated
     // offline.

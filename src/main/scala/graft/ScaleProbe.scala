@@ -257,10 +257,6 @@ object ScaleProbe {
       else sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-scale"
     val spark = GraftSession.build(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-scale")
-    // apples-to-apples across scales: semDedup's label-cell→k-means size
-    // gate would otherwise switch algorithms between x1 and x16, making
-    // the ratio compare two different approximations
-    spark.conf.set("spark.graft.dedup.maxLabelCellVecs", "0")
     spark.range(1000).selectExpr("sum(id)").collect()
     val dirs = Factors.map(k => k -> writeScaled(spark, sfDir, outDir, k)).toMap
     // The fixture-write phase (first run only) leaves shuffle files,
@@ -282,8 +278,14 @@ object ScaleProbe {
     // setsim shingle/pair tables, TF-IDF index), which is the right serving
     // behavior but would turn a scaling probe into a cached-read timing —
     // the ratio must measure the COMPUTE's growth, not the cache's.
+    // apples-to-apples across scales: semDedup's label-cell→k-means size
+    // gate would otherwise switch algorithms between x1 and x16, making
+    // the ratio compare two different approximations
+    def query(op: String): (SparkSession, String) => DataFrame =
+      if (op == "emb_semdedup") graft.queries.EmbeddingQueries.semDedupKmeans(_, _)
+      else SparkEntry.queries(op)
     def time(op: String, dir: String): (BenchSampler.Sample, Int, Seq[String]) = {
-      val fn = SparkEntry.queries(op)
+      val fn = query(op)
       def once(): Unit = {
         graft.queries.MemoCache.evict(spark, _ => true)
         fn(spark, dir).queryExecution.toRdd.count(): Unit
@@ -303,7 +305,7 @@ object ScaleProbe {
           (if (reasons.nonEmpty) s" DIRTY=${reasons.mkString("+")}" else ""))
         k -> (s, retries, reasons)
       }.toMap
-      val rows = SparkEntry.queries(op)(spark, dirs(kHi)).count()
+      val rows = query(op)(spark, dirs(kHi)).count()
       op -> (secs, rows)
     }
     val json = report.map { case (op, (s, rows)) =>

@@ -337,6 +337,16 @@ object DocQueries {
     * standard production pruning for inverted-index dedup. */
   private val DfCap = 10
 
+  /** Broadcast budget of the dedup family's driver-collect paths (shingle
+    * verify, fuzzy band join, cosine near-dup): a corpus must fit BOTH the
+    * doc count and the estimated bytes to broadcast. */
+  private[queries] val MaxBroadcastDocs = 1L << 20
+  private val MaxBroadcastBytes = 128L << 20
+  /** Pair graphs up to this size resolve by driver union-find. */
+  private val MaxDriverPairs = 4L << 20
+  /** Incoming shards up to this many docs broadcast their band keys. */
+  private val MaxBroadcastDeltaDocs = 2000000L
+
   private val shinglesUdf =
     udf((text: String) => graft.functions.MinHash.shingleHashes(text))
 
@@ -372,9 +382,12 @@ object DocQueries {
     * candidate generation + merge-walk verify (empty shingle sets never
     * reach the exploded index, so containment's size(sh)>0 pre-filter was
     * value-neutral), and each previously rebuilt it per family. One build,
-    * both consumers project/filter the cached rows. */
-  private[queries] def scoredPairs(spark: SparkSession, d: String): DataFrame =
-    MemoCache.getOrElseUpdate(spark, ("scored-pairs", d))({
+    * both consumers project/filter the cached rows. Keyed on the broadcast
+    * budget `maxDocs`, so a test that forces the join path never shares an
+    * entry with the default query. */
+  private[queries] def scoredPairs(spark: SparkSession, d: String,
+                                   maxDocs: Long = MaxBroadcastDocs): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("scored-pairs", d, maxDocs))({
       val docs = shingleDocs(spark, d)
       // NOT repartitioned before the explode: measured 6.2s -> 6.8s cold
       // (the extra exchange's planning/codegen outweighs parallelizing the
@@ -386,11 +399,12 @@ object DocQueries {
       // engines hash identically, so even collisions agree bit-for-bit).
       // The broadcast-merge-walk vs candidate-join physical choice lives
       // in [[scoredCandidatePairs]].
-      scoredCandidatePairs(spark, docs, rareShingleCandidates(ex)).cache()
+      scoredCandidatePairs(spark, docs, rareShingleCandidates(ex), maxDocs).cache()
     })(_.unpersist(blocking = false))
 
-  private[graft] def neardupJaccardCompute(spark: SparkSession, d: String): DataFrame =
-    scoredPairs(spark, d)
+  private[graft] def neardupJaccardCompute(spark: SparkSession, d: String,
+                                           maxDocs: Long = MaxBroadcastDocs): DataFrame =
+    scoredPairs(spark, d, maxDocs)
       .withColumn("jaccard", col("inter").cast("double") /
         (col("n1") + col("n2") - col("inter")).cast("double"))
       .filter(col("jaccard") >= 0.3)
@@ -479,17 +493,11 @@ object DocQueries {
     * (8 per hash) — a doc-count gate alone lets a long-document corpus
     * broadcast multi-GB, the exact hazard fuzzyDedup's text gate closed.
     * One agg action over the memo-cached shingle scan. */
-  private def shingleBroadcastable(spark: SparkSession, docs: DataFrame): Boolean = {
-    val maxDocs = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(1L << 20)
-    val maxBytes = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastBytes").map(_.toLong)
-      .getOrElse(128L << 20)
+  private def shingleBroadcastable(docs: DataFrame, maxDocs: Long): Boolean = {
     val st = docs
       .agg(count(lit(1)), coalesce(sum(size(col("sh")).cast("long")), lit(0L)))
       .head()
-    st.getLong(0) <= maxDocs && 8L * st.getLong(1) <= maxBytes
+    st.getLong(0) <= maxDocs && 8L * st.getLong(1) <= MaxBroadcastBytes
   }
 
   /** (d1, d2, n1, n2, inter) for every candidate pair — the verify core
@@ -498,9 +506,9 @@ object DocQueries {
     * physical forms produce bit-identical rows (DedupScaleSpec pins the
     * oracled consumer). */
   private def scoredCandidatePairs(spark: SparkSession, docs: DataFrame,
-                                   candidates: DataFrame): DataFrame = {
+                                   candidates: DataFrame, maxDocs: Long): DataFrame = {
     import spark.implicits._
-    if (shingleBroadcastable(spark, docs)) {
+    if (shingleBroadcastable(docs, maxDocs)) {
       val sortedSets = spark.sparkContext.broadcast(
         docs.as[(Long, Array[Long])].collect().toMap) // hashes arrive pre-sorted
       candidates.as[(Long, Long)].mapPartitions { it =>
@@ -566,7 +574,7 @@ object DocQueries {
     * run as driver-side union-find over the collected pairs and the label
     * table broadcasts back over the corpus — one narrow assignment pass.
     * A size gate guards the collect: pair graphs beyond
-    * `spark.graft.dedup.maxDriverPairs` (adversarial corpora —
+    * [[MaxDriverPairs]] (adversarial corpora —
     * mass-duplicated boilerplate makes the pair graph unbounded) route
     * through the distributed [[graft.functions.Components.components]]
     * instead — iterative min-label propagation, each round one join +
@@ -574,18 +582,20 @@ object DocQueries {
     * same deterministic component-minimum labels (ComponentsSpec parity +
     * DedupScaleSpec forcing the gate). */
   def dedupClusters(spark: SparkSession, d: String): DataFrame =
-    resolveClusters(spark, d, neardupJaccard(spark, d).select(col("d1"), col("d2")))
+    dedupClustersWith(spark, d, MaxDriverPairs)
+
+  private[graft] def dedupClustersWith(spark: SparkSession, d: String,
+                                       maxDriverPairs: Long): DataFrame =
+    resolveClusters(spark, d,
+      neardupJaccard(spark, d).select(col("d1"), col("d2")), maxDriverPairs)
 
   /** Pair graph → per-document (canonical id, duplicate flag). Shared by
     * the exact-Jaccard pipeline ([[dedupClusters]]) and the MinHash one
     * ([[minhashDedup]]) — the candidate generator differs, the resolution
     * step is identical. */
-  private def resolveClusters(
-      spark: SparkSession, d: String, pairsDf: DataFrame): DataFrame = {
+  private def resolveClusters(spark: SparkSession, d: String, pairsDf: DataFrame,
+                              maxDriverPairs: Long = MaxDriverPairs): DataFrame = {
     import spark.implicits._
-    val maxDriverPairs = spark.conf
-      .getOption("spark.graft.dedup.maxDriverPairs").map(_.toLong)
-      .getOrElse(4L << 20)
     val (labelDf, smallGraph) =
       if (pairsDf.count() <= maxDriverPairs) {
         val pairs = pairsDf.as[(Long, Long)].collect()
@@ -857,7 +867,7 @@ object DocQueries {
     * signatures → banded LSH candidates → exact-Jaccard verification →
     * connected components → one canonical document per cluster, flag-not-
     * drop. Identical resolution machinery to [[dedupClusters]] (driver
-    * union-find below `spark.graft.dedup.maxDriverPairs`, distributed
+    * union-find below [[MaxDriverPairs]], distributed
     * min-label propagation above); the difference is the candidate
     * generator — banded LSH keeps candidate generation sub-quadratic at
     * corpus scale where the df-capped inverted index of [[neardupJaccard]]
@@ -893,11 +903,9 @@ object DocQueries {
     // driver if the hint were unconditional — above the threshold the same
     // equi-join plans as a shuffle on (band, bucket). The count is free-ish:
     // it populates the cache the rest of the pipeline reuses.
-    val maxBroadcastDelta = spark.conf.getOption(
-      "spark.graft.dedup.maxBroadcastDeltaDocs").map(_.toLong).getOrElse(2000000L)
     val nIncoming = docs.filter(col("incoming")).count()
     val probeSide =
-      if (nIncoming <= maxBroadcastDelta) broadcast(inBands.as("a"))
+      if (nIncoming <= MaxBroadcastDeltaDocs) broadcast(inBands.as("a"))
       else inBands.as("a")
     val cand = baseBands.as("b").join(probeSide,
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
@@ -2008,10 +2016,9 @@ object DocQueries {
     * map-side), no vocabulary-sized broadcast. Scores therefore never
     * exceed the exact model's nll, and agree bit-for-bit unless a token
     * collides in all [[graft.functions.CountMin.Depth]] hash rows
-    * (SketchSpec pins exact agreement on the fixture corpus). Opt-in via
-    * `spark.graft.lm.cmsModel=true`; the DuckDB oracle checks the exact
-    * path. */
-  private def unigramLmCms(spark: SparkSession, d: String): DataFrame = {
+    * (SketchSpec pins exact agreement on the fixture corpus). Not wired to
+    * a query: the DuckDB oracle checks the exact path. */
+  private[graft] def unigramLmCms(spark: SparkSession, d: String): DataFrame = {
     val (bc, lnTotal) = MemoCache.getOrElseUpdate(spark, ("cms-lm", d))({
       val row = documents(spark, d)
         .select(explode(toks(col("text"))).as("token"))
@@ -2042,12 +2049,12 @@ object DocQueries {
         round(nllUdf(col("tk")), 6).as("nll"))
   }
 
-  def unigramLm(spark: SparkSession, d: String): DataFrame = {
+  def unigramLm(spark: SparkSession, d: String): DataFrame =
+    unigramLmCapped(spark, d, VocabCap)
+
+  private[graft] def unigramLmCapped(spark: SparkSession, d: String,
+                                     cap: Int): DataFrame = {
     import spark.implicits._
-    if (spark.conf.getOption("spark.graft.lm.cmsModel").contains("true"))
-      return unigramLmCms(spark, d)
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
     val (bc, lnTotal) = MemoCache.getOrElseUpdate(spark, ("unigram-lm", d, cap))({
       val counts = documents(spark, d)
         .select(explode(toks(col("text"))).as("token"))
@@ -2106,7 +2113,7 @@ object DocQueries {
     *
     * Scale: identical shape to [[unigramLm]] — two map-side-combinable
     * count aggregations (bigram + unigram), both capped to the top-K
-    * entries (`spark.graft.lm.vocabCap`) before broadcast, then a narrow
+    * entries ([[VocabCap]]) before broadcast, then a narrow
     * per-row fold in token order (order-deterministic double sum, so the
     * DuckDB oracle hash-matches). */
   /** Top-`cap` (count DESC, key ASC) counts of `ex`'s exploded `g` column,
@@ -2138,22 +2145,19 @@ object DocQueries {
     * [[bigramLm]] and [[knBigram]] both previously ran the identical
     * explode + count + TakeOrdered + collect as part of their own model
     * builds. Driver-side map only (release is a no-op — no cluster
-    * storage; bounded by `cap`). */
-  private def bigramCounts(spark: SparkSession, d: String,
-                           cap: Int): Map[String, Long] =
-    MemoCache.getOrElseUpdate(spark, ("bigram-counts", d, cap))(
-      topCounts(spark, bigramInstances(spark, d), cap))(_ => ())
+    * storage; bounded by [[VocabCap]]). */
+  private def bigramCounts(spark: SparkSession, d: String): Map[String, Long] =
+    MemoCache.getOrElseUpdate(spark, ("bigram-counts", d))(
+      topCounts(spark, bigramInstances(spark, d), VocabCap))(_ => ())
 
   def bigramLm(spark: SparkSession, d: String): DataFrame = {
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
     val tk = toks(col("text"))
-    // the two model builds memoize once per (session, dataset, cap);
+    // the two model builds memoize once per (session, dataset);
     // repeated invocations only pay the fold
-    val (bg, ug) = MemoCache.getOrElseUpdate(spark, ("bigram-lm", d, cap))((
-      spark.sparkContext.broadcast(bigramCounts(spark, d, cap)),
+    val (bg, ug) = MemoCache.getOrElseUpdate(spark, ("bigram-lm", d))((
+      spark.sparkContext.broadcast(bigramCounts(spark, d)),
       spark.sparkContext.broadcast(topCounts(spark,
-        documents(spark, d).select(explode(tk).as("g")), cap))))(
+        documents(spark, d).select(explode(tk).as("g")), VocabCap))))(
       v => { v._1.unpersist(blocking = false); v._2.unpersist(blocking = false) })
     val nllUdf = udf((t: Seq[String]) => {
       if (t == null || t.length < 2) None
@@ -2210,14 +2214,12 @@ object DocQueries {
     * narrow in-order per-row fold. The DuckDB oracle replays the same
     * arithmetic expression-for-expression, so doubles agree bit-for-bit. */
   def knBigram(spark: SparkSession, d: String): DataFrame = {
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
     val tk = toks(col("text"))
-    val model = MemoCache.getOrElseUpdate(spark, ("kn-bigram", d, cap))({
+    val model = MemoCache.getOrElseUpdate(spark, ("kn-bigram", d))({
       // the SAME capped bigram count table [[bigramLm]] scores against —
       // shared via [[bigramCounts]] instead of re-running the explode +
       // count + TakeOrdered + collect per family member
-      val bc: Map[String, Long] = bigramCounts(spark, d, cap)
+      val bc: Map[String, Long] = bigramCounts(spark, d)
       // context totals / follower fan-out / continuation counts are pure
       // functions of the (capped) model — derive once on the driver
       val ctx = bc.groupMapReduce(_._1.split(" ", 2)(0))(_._2)(_ + _)
@@ -2623,10 +2625,10 @@ object DocQueries {
        |FROM k""".stripMargin
 
   // ------------------------------------------------- BPE tokenizer
-  /** Merge count for the corpus-trained BPE model ([[bpeTrain]]);
-    * overridable for tests via `spark.graft.bpe.merges`. */
+  /** Merge count for the corpus-trained BPE model ([[bpeTrain]]). */
   private val BpeMerges = 16
-
+  /** Vocabularies up to this size train on the driver. */
+  private val BpeMaxDriverVocab = 1L << 20
 
   /** Distributed BPE training (Sennrich et al. 2016), the real merge loop —
     * not the regex approximation of [[tokenCounts]]:
@@ -2644,7 +2646,7 @@ object DocQueries {
     * Scale: classic BPE trains on the VOCABULARY, so after the one
     * corpus-scale shuffle the working set is orders of magnitude below
     * corpus rows. Two paths, gated like the dedup driver-collect family
-    * (`spark.graft.bpe.maxDriverVocab`, default 2^20):
+    * ([[BpeMaxDriverVocab]]):
     *
     *  - vocab fits the gate → collect (word, count) and run the merge loop
     *    on the driver: M iterations over <=1M entries is milliseconds, vs
@@ -2666,16 +2668,13 @@ object DocQueries {
     * in-test reference). The DuckDB oracles ([[bpeTrainSql]] /
     * [[bpeEncodeSql]]) replay the full iterative loop with recursive CTEs
     * over the capped merge list, so both queries hash-check. */
-  private def bpeMerges(spark: SparkSession, d: String): Seq[(String, String, Long)] = {
+  private def bpeMerges(spark: SparkSession, d: String, m: Int = BpeMerges,
+                        gate: Long = BpeMaxDriverVocab): Seq[(String, String, Long)] = {
     import spark.implicits._
-    // merges memoize per (session, dataset, merges) — the trainer is
+    // merges memoize per (session, dataset, merges, gate) — the trainer is
     // iterative, so repeated calls (train + encode + bench warm passes)
     // must not re-run M jobs each; plain driver data, so release is a no-op
-    val m = spark.conf.getOption("spark.graft.bpe.merges")
-      .map(_.toInt).getOrElse(BpeMerges)
-    MemoCache.getOrElseUpdate(spark, ("bpe-merges", d, m))({
-      val gate = spark.conf.getOption("spark.graft.bpe.maxDriverVocab")
-        .map(_.toLong).getOrElse(1L << 20)
+    MemoCache.getOrElseUpdate(spark, ("bpe-merges", d, m, gate))({
       var vocab = documents(spark, d)
         .select(explode(toks(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
@@ -2754,9 +2753,13 @@ object DocQueries {
 
   /** The learned merge table as a frame: (rank, left, right, merged,
     * pair_count). */
-  def bpeTrain(spark: SparkSession, d: String): DataFrame = {
+  def bpeTrain(spark: SparkSession, d: String): DataFrame =
+    bpeTrainWith(spark, d, BpeMerges, BpeMaxDriverVocab)
+
+  private[graft] def bpeTrainWith(spark: SparkSession, d: String, merges: Int,
+                                  maxDriverVocab: Long): DataFrame = {
     import spark.implicits._
-    bpeMerges(spark, d).zipWithIndex
+    bpeMerges(spark, d, merges, maxDriverVocab).zipWithIndex
       .map { case ((l, r, c), i) => (i, l, r, l + r, c) }
       .toDF("rank", "left", "right", "merged", "pair_count")
   }
@@ -3367,14 +3370,16 @@ object DocQueries {
     * reproducible and the oracle hash-matches. At 100 TB the source model
     * would cap its vocabulary behind a count-min sketch; the fold is
     * unchanged. */
-  def importance(spark: SparkSession, d: String): DataFrame = {
+  def importance(spark: SparkSession, d: String): DataFrame =
+    importanceCapped(spark, d, VocabCap)
+
+  private[graft] def importanceCapped(spark: SparkSession, d: String,
+                                      cap: Int): DataFrame = {
     import spark.implicits._
     // same top-K vocabulary cap as [[unigramLm]]: the total token mass (the
     // normalizer) aggregates BEFORE the cap, so only what ships to
     // executors is bounded; off-model tokens fall back to count 1 exactly
-    // as OOV does. The cap is overridable for tests that make it bind.
-    val cap = spark.conf.getOption("spark.graft.lm.vocabCap")
-      .map(_.toInt).getOrElse(VocabCap)
+    // as OOV does.
     val docs = documents(spark, d)
     val (bcT, bcS, lnTgtTotal, lnSrcTotal) =
       MemoCache.getOrElseUpdate(spark, ("dsir", d, cap))({
@@ -3789,59 +3794,39 @@ object DocQueries {
     * consumers (corpus side, probe broadcast, both norm lookups): measured
     * 2.5s → 0.9s warm at sf0.1. */
   def tfidfKnn(spark: SparkSession, d: String): DataFrame =
+    tfidfKnnWith(spark, d, TfidfDfCapFrac)
+
+  private[graft] def tfidfKnnWith(spark: SparkSession, d: String,
+                                  capFrac: Double): DataFrame =
     // Memoized alongside the index: the top-k output is probe-bounded
     // (≤ probes × TfidfTopK rows — model-sized), and the recall row joins
     // BOTH rank tails, so without this it re-runs the full corpus×probe
     // scoring join its two siblings already paid for.
-    MemoCache.getOrElseUpdate(spark, ("tfidf-knn", d, tfidfCapCfg(spark)))({
-      val (weights, norms) = tfidfIndex(spark, d)
+    MemoCache.getOrElseUpdate(spark, ("tfidf-knn", d, capFrac))({
+      val (weights, norms) = tfidfIndex(spark, d, capFrac)
       val probes = weights.filter(col("doc_id") % TfidfProbeMod === 0)
         .select(col("doc_id").as("probe_id"), col("term"), col("w").as("pw"))
       tfidfRank(weights, norms, probes).cache()
     })(_.unpersist(blocking = false))
 
-  /** The df-cap configuration that keys every tfidf memo entry. */
-  private def tfidfCapCfg(spark: SparkSession): Any = (
-    spark.conf.getOption("spark.graft.tfidf.dfCapFrac").map(_.toDouble),
-    spark.conf.getOption("spark.graft.tfidf.capMaxDropFrac")
-      .map(_.toDouble).getOrElse(TfidfCapMaxDropFrac))
-
   /** The shared memoized (weights, norms) index build — see the Scaladoc
     * above; factored out so the impact-pruned variant reads the SAME
     * index. */
-  private def tfidfIndex(spark: SparkSession, d: String): (DataFrame, DataFrame) = {
-    // Impact pruning (`spark.graft.tfidf.dfCapFrac`, DEFAULT 0.5): drop
-    // terms whose df exceeds the given fraction of the corpus. On a web
-    // corpus stopword postings dominate the term-keyed exchange while
-    // ranking nothing (bottom-of-scale idf) — 0.5 is the classic stopword
-    // cap, and at warehouse scale it is the default path, not an opt-in.
-    // Degeneracy gate: when the cap is NOT set explicitly, it auto-applies
-    // only if the terms it would drop are <= `capMaxDropFrac` (default 0.2)
-    // of the vocabulary — on a Zipf corpus the >0.5-df terms are a handful
-    // of stopwords, while on a degenerate tiny-vocab corpus (the synthetic
-    // fixture's 31 terms, nearly all corpus-dense) capping would empty the
-    // index, so the gate leaves it uncapped there. The oracle replays the
-    // same gate + cap, so both regimes stay hash-exact; an explicit conf
-    // value applies unconditionally (pinned by PipelineSpec's planted
-    // hot-term test).
-    val capConf = spark.conf.getOption("spark.graft.tfidf.dfCapFrac")
-      .map(_.toDouble)
-    val capFrac = capConf.getOrElse(TfidfDfCapFrac)
-    val dropMax = spark.conf.getOption("spark.graft.tfidf.capMaxDropFrac")
-      .map(_.toDouble).getOrElse(TfidfCapMaxDropFrac)
-    // evict superseded cap settings for this (session, dataset) eagerly
-    // (ahead of LRU pressure): each entry pins two corpus-sized cached
-    // frames — sweeping dfCapFrac must not accumulate abandoned index
-    // copies in executor memory
-    MemoCache.evict(spark, {
-      case ("tfidf-index", `d`, cfg) => cfg != ((capConf, dropMax))
-      // the memoized rank tails are derived from the index — stale cap
-      // variants go with it
-      case ("tfidf-knn", `d`, cfg) => cfg != ((capConf, dropMax))
-      case ("tfidf-capped", `d`, cfg, _) => cfg != ((capConf, dropMax))
-      case _ => false
-    })
-    MemoCache.getOrElseUpdate(spark, ("tfidf-index", d, (capConf, dropMax)))({
+  private def tfidfIndex(spark: SparkSession, d: String,
+                         capFrac: Double): (DataFrame, DataFrame) =
+    // Impact pruning ([[TfidfDfCapFrac]], 0.5; 0 disables): drop terms
+    // whose df exceeds the given fraction of the corpus. On a web corpus
+    // stopword postings dominate the term-keyed exchange while ranking
+    // nothing (bottom-of-scale idf) — 0.5 is the classic stopword cap, and
+    // at warehouse scale it is the default path, not an opt-in.
+    // Degeneracy gate: the cap applies only if the terms it would drop are
+    // <= [[TfidfCapMaxDropFrac]] of the vocabulary — on a Zipf corpus the
+    // >0.5-df terms are a handful of stopwords, while on a degenerate
+    // tiny-vocab corpus (the synthetic fixture's 31 terms, nearly all
+    // corpus-dense) capping would empty the index, so the gate leaves it
+    // uncapped there. The oracle replays the same gate + cap, so both
+    // regimes stay hash-exact.
+    MemoCache.getOrElseUpdate(spark, ("tfidf-index", d, capFrac))({
       val docs = documents(spark, d)
       // Terms enter the index as 52-bit md5-prefix HASHES (longs), not
       // strings: no tfidf output carries a term, so every term-keyed
@@ -3866,13 +3851,13 @@ object DocQueries {
         .crossJoin(broadcast(nDocs))
       // model-sized decision (one row over the vocab table), made once per
       // memoized index build
-      val applyCap = capFrac > 0 && (capConf.isDefined || {
+      val applyCap = capFrac > 0 && {
         val g = dfTable.crossJoin(broadcast(nDocs))
           .agg(count(lit(1)).as("nv"),
             sum(when(col("df") > col("n_docs") * capFrac, 1L).otherwise(0L))
               .as("ncap")).head()
-        g.getLong(0) > 0 && g.getLong(1).toDouble <= g.getLong(0) * dropMax
-      })
+        g.getLong(0) > 0 && g.getLong(1).toDouble <= g.getLong(0) * TfidfCapMaxDropFrac
+      }
       val capped =
         if (applyCap) joined.filter(col("df") <= col("n_docs") * capFrac)
         else joined
@@ -3882,7 +3867,6 @@ object DocQueries {
         .cache()
       (w, w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nrm2")).cache())
     })(v => { v._1.unpersist(blocking = false); v._2.unpersist(blocking = false) })
-  }
 
   /** Corpus-postings × probe-terms scoring tail, shared by the exact and
     * impact-pruned variants: `corpusW` is the posting table candidates come
@@ -3915,7 +3899,7 @@ object DocQueries {
     * linearly and the candidate join's output grows with posting² (the
     * honest x64 probe read the x16→x64 segment at ~1.25x over linear —
     * exactly this tail). Standard impact ordering (Anh & Moffat): each
-    * term keeps only its `spark.graft.tfidf.postingCap` (default 1024)
+    * term keeps only its capped (see [[TfidfPostingCapDiv]])
     * highest-WEIGHT postings as candidate generators, via the
     * partial-aggregating [[graft.functions.TopK]] (the shuffle carries
     * ≤ cap rows per (term, split) — a term-partitioned rank window would
@@ -3926,31 +3910,16 @@ object DocQueries {
     * — no posting reaches the cap floor in a 500-doc corpus; the
     * corpus-fraction cap exists for the scale where posting lists outgrow
     * it — see [[TfidfPostingCapDiv]] for the x256 lesson). */
-  def tfidfKnnCapped(spark: SparkSession, d: String): DataFrame = {
-    // `spark.graft.tfidf.postingCap` is a DEV-ONLY override (cap sweeps,
-    // scale probes): the SQL oracle always replays the default
-    // GREATEST(floor, n_docs/div) formula, so an explicit value makes the
-    // two sides diverge by design — never set it on an oracle-gated run.
-    val cap = spark.conf.getOption("spark.graft.tfidf.postingCap")
-      .map(_.toInt).getOrElse {
-        val nDocs = docCount(spark, d)
-        math.max(TfidfPostingCapMin.toLong, nDocs / TfidfPostingCapDiv).toInt
-      }
-    // eager eviction of superseded posting-cap variants (cap sweeps must
-    // not accumulate abandoned cached tails — same policy as the index)
-    MemoCache.evict(spark, {
-      case ("tfidf-capped", `d`, _, c) => c != cap
-      case _ => false
-    })
-    MemoCache.getOrElseUpdate(spark,
-      ("tfidf-capped", d, tfidfCapCfg(spark), cap))(
-      tfidfKnnCappedBuild(spark, d, cap).cache())(
+  def tfidfKnnCapped(spark: SparkSession, d: String): DataFrame =
+    // the SQL oracle replays the same GREATEST(floor, n_docs/div) formula
+    MemoCache.getOrElseUpdate(spark, ("tfidf-capped", d))(
+      tfidfKnnCappedBuild(spark, d, math.max(TfidfPostingCapMin.toLong,
+        docCount(spark, d) / TfidfPostingCapDiv).toInt).cache())(
       _.unpersist(blocking = false))
-  }
 
   private def tfidfKnnCappedBuild(spark: SparkSession, d: String,
                                   cap: Int): DataFrame = {
-    val (weights, norms) = tfidfIndex(spark, d)
+    val (weights, norms) = tfidfIndex(spark, d, TfidfDfCapFrac)
     // w fits a double exactly here (tf·(N·scale DIV df) < 2^53 up to
     // ~10^15 — far past the long-overflow bound the index already
     // documents), and (w desc, doc_id asc) is the UDAF's total order
@@ -4320,14 +4289,19 @@ object DocQueries {
     * Scale: the word graph is vocabulary-sized — tiny next to the corpus at
     * any scale (Heaps' law) — so after one map-side-combinable adjacency
     * aggregation the rank loop runs on model-sized tables; below
-    * `spark.graft.textrank.maxDriverEdges` it iterates on the driver (10
+    * [[TrMaxDriverEdges]] it iterates on the driver (10
     * distributed rounds of per-job overhead dwarf arithmetic on a vocab
     * graph), above it the identical updates run as joins, checkpointed per
     * round to keep lineage flat. */
   private val TrScale = 1000000000000L
   private val TrIters = 10
+  private val TrMaxDriverEdges = 4L << 20
 
-  def textrank(spark: SparkSession, d: String): DataFrame = {
+  def textrank(spark: SparkSession, d: String): DataFrame =
+    textrankWith(spark, d, TrMaxDriverEdges)
+
+  private[graft] def textrankWith(spark: SparkSession, d: String,
+                                  maxDriverEdges: Long): DataFrame = {
     import spark.implicits._
     // adjacent-pair weights, canonical (a < b), self-loops dropped —
     // exchange-free until the pair-count agg via [[collocations]]'
@@ -4368,9 +4342,6 @@ object DocQueries {
           "word STRING, rank_scaled BIGINT, rank DOUBLE"))
     }
     val base = 15L * TrScale / (100L * n)
-    val maxDriverEdges = spark.conf
-      .getOption("spark.graft.textrank.maxDriverEdges").map(_.toLong)
-      .getOrElse(4L << 20)
     val ranks: DataFrame = if (nEdges <= maxDriverEdges) {
       val es = edges.as[(String, String, Long)].collect()
       val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
@@ -4568,7 +4539,7 @@ object DocQueries {
     * asserts). ceil(t*n) is computed in integer arithmetic
     * ((p*n + q - 1) DIV q) so both engines agree exactly; the Jaccard
     * test cross-multiplies (q*inter >= p*union) — no floats end to end.
-    * Threshold override: `spark.graft.setsim.p/q` (default 3/5). */
+    * Threshold: [[SetsimP]]/[[SetsimQ]] = 3/5. */
   /** AllPairs candidate pairs for `docs(doc_id, s: array)` at Jaccard
     * threshold p/q: rarest-first prefix posting-list join (see
     * [[setsimJoin]] for the completeness argument). Element-type agnostic
@@ -4667,28 +4638,36 @@ object DocQueries {
     * family members previously each built their own explode + df count +
     * rank window, and the exact join's copy moved ~20-byte shingle STRINGS
     * through all three exchanges; the hashed index moves 8-byte longs —
-    * guide §2.3). Sound for the exact join because candidate generation
-    * only needs COMPLETENESS: a collision merges shingles, which can only
-    * RAISE a pair's hashed Jaccard above its string Jaccard (intersections
-    * grow, unions shrink), so every pair passing the string-set threshold
-    * is found on the hashed index too — and any total order over the
-    * hashed elements satisfies the AllPairs prefix theorem. The verify
+    * guide §2.3). Candidate generation needs COMPLETENESS, and any total
+    * order over the hashed elements satisfies the AllPairs prefix theorem,
+    * so every pair whose HASHED Jaccard passes is found. A collision can
+    * move a pair's hashed Jaccard either way: two colliding shingles that
+    * are both in the pair's intersection give (i−1)/(u−1) < i/u, so a pair
+    * just above the string threshold can fall below it and be missed
+    * (every other collision raises the hashed value). A miss therefore
+    * needs a 52-bit collision among the corpus's n distinct shingles —
+    * odds about n²/2^53 (~0.03 at n = 16.7M, the x64 probe) — that
+    * also lands inside one near-threshold pair's intersection. The verify
     * stays exact on the STRING sets, so false candidates are dropped and
-    * the output is byte-identical to the string-indexed build. */
+    * the output is the string-indexed build's whenever no such collision
+    * exists. [[setsimJoinCapped]] is unaffected: it is defined on the
+    * hashed sets, and its oracle replays the same hash. */
   private def setsimRankedHashed(spark: SparkSession, d: String): DataFrame =
     MemoCache.getOrElseUpdate(spark, ("setsim-ranked", d))(
       rankedIndex(setsimDocsHashed(spark, d)).cache())(
       _.unpersist(blocking = false))
 
-  def setsimJoin(spark: SparkSession, d: String): DataFrame = {
-    val p = spark.conf.getOption("spark.graft.setsim.p").map(_.toInt).getOrElse(3)
-    val q = spark.conf.getOption("spark.graft.setsim.q").map(_.toInt).getOrElse(5)
-    MemoCache.getOrElseUpdate(spark, ("setsim-pairs", d, p, q))({
+  private val SetsimP = 3
+  private val SetsimQ = 5
+  /** Posting cap of [[setsimJoinCapped]]'s candidate generation. */
+  private val SetsimDfCap = 32L
+
+  def setsimJoin(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("setsim-pairs", d))({
       val docs = setsimDocs(spark, d)
-      setsimVerified(docs,
-        prefixCandidates(setsimRankedHashed(spark, d), p, q), p, q).cache()
+      setsimVerified(docs, prefixCandidates(setsimRankedHashed(spark, d),
+        SetsimP, SetsimQ), SetsimP, SetsimQ).cache()
     })(_.unpersist(blocking = false))
-  }
 
   /** The 100-TB scale path of [[setsimJoin]] — two deltas from the exact
     * join, both oracle-replayed:
@@ -4703,24 +4682,20 @@ object DocQueries {
     *    (expected colliding pairs at 2^52 over a 16.7M-shingle corpus:
     *    ~0.02), so parity is exact and the semantic drift is measured by
     *    [[setsimRecall]], not assumed away.
-    *  - POSTING CAP on candidate generation (`spark.graft.setsim.dfcap`,
-    *    default 32): a guardrail, not an optimization — the AllPairs
+    *  - POSTING CAP on candidate generation ([[SetsimDfCap]] = 32): a
+    *    guardrail, not an optimization — the AllPairs
     *    rarest-first prefix already keeps prefix-token df small on Zipf
     *    corpora (measured max 7 at sf0.01, 14 at x64 — corpus-dense
     *    shingles never enter prefixes by construction), but an
     *    adversarial/boilerplate corpus whose RAREST tokens are still
     *    dense would blow O(df²) per posting; the cap bounds that, and on
     *    the fixtures it never binds (recall row reads 1.0). */
-  def setsimJoinCapped(spark: SparkSession, d: String): DataFrame = {
-    val p = spark.conf.getOption("spark.graft.setsim.p").map(_.toInt).getOrElse(3)
-    val q = spark.conf.getOption("spark.graft.setsim.q").map(_.toInt).getOrElse(5)
-    val cap = spark.conf.getOption("spark.graft.setsim.dfcap").map(_.toLong).getOrElse(32L)
-    MemoCache.getOrElseUpdate(spark, ("setsim-pairs-capped", d, p, q, cap))({
+  def setsimJoinCapped(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("setsim-pairs-capped", d))({
       val docs = setsimDocsHashed(spark, d)
-      setsimVerified(docs,
-        prefixCandidates(setsimRankedHashed(spark, d), p, q, cap), p, q).cache()
+      setsimVerified(docs, prefixCandidates(setsimRankedHashed(spark, d),
+        SetsimP, SetsimQ, SetsimDfCap), SetsimP, SetsimQ).cache()
     })(_.unpersist(blocking = false))
-  }
 
   /** 52-bit md5-prefix hashes of the 3-token shingles, distinct — the
     * DuckDB-replayable `('0x' || substr(md5(g), 20, 13))::UBIGINT`: hex
@@ -5074,8 +5049,9 @@ object DocQueries {
     * `levenshtein(a, b, K)` bands but always fills the whole band, and
     * swapping it out cut the verify-dominated query ~3x at sf0.1).
     * Contract-identical to the built-in: -1 above the threshold, so
-    * `dist >= 0` is exactly `dist <= K`.
-    * K override: `spark.graft.fuzzy.maxDist` (default 40). */
+    * `dist >= 0` is exactly `dist <= K` ([[FuzzyK]] = 40). */
+  private val FuzzyK = 40
+
   private def fuzzyDocs(spark: SparkSession, d: String): DataFrame =
     MemoCache.getOrElseUpdate(spark, ("fuzzy-docs", d))(
       documents(spark, d).select(col("doc_id"), col("text"), col("n_chars"))
@@ -5085,17 +5061,17 @@ object DocQueries {
     * the shared intermediate of the fuzzy family ([[fuzzyRecall]] re-runs
     * it as the recall denominator right after this operator produced it) —
     * a production pipeline materializes the verified pair table once and
-    * every consumer reads it. Keyed on (dataset, K, prune toggle); the
-    * scale probes evict before every sample, so A/B and planted runs still
-    * pay the full compute. */
-  def fuzzyDedup(spark: SparkSession, d: String): DataFrame = {
-    val k = spark.conf.getOption("spark.graft.fuzzy.maxDist").map(_.toInt).getOrElse(40)
-    MemoCache.getOrElseUpdate(spark,
-      ("fuzzy-exact-pairs", d, k, histPruneOn(spark)))(
-      fuzzyDedupCompute(spark, d, k).cache())(_.unpersist(blocking = false))
-  }
+    * every consumer reads it. The scale probes evict before every sample,
+    * so planted runs still pay the full compute. */
+  def fuzzyDedup(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("fuzzy-exact-pairs", d))(
+      fuzzyDedupCompute(spark, d).cache())(_.unpersist(blocking = false))
 
-  private def fuzzyDedupCompute(spark: SparkSession, d: String, k: Int): DataFrame = {
+  /** Unmemoized [[fuzzyDedup]]; `maxBroadcastDocs` is the band join's
+    * broadcast budget (tests shrink it to force the salted path). */
+  private[graft] def fuzzyDedupCompute(spark: SparkSession, d: String,
+      maxBroadcastDocs: Long = MaxBroadcastDocs): DataFrame = {
+    val k = FuzzyK
     // One MEMOIZED scan feeds the gate probe and BOTH join sides, shared
     // across the fuzzy family (dedup/blocked/recall all start here): the
     // stats action below populates the cache, so the plan reads parquet
@@ -5133,19 +5109,13 @@ object DocQueries {
     // fanned out 3x, so a doc-count gate alone would let a long-document
     // corpus broadcast multi-GB. Estimate = 3 * sum(n_chars); one agg
     // action yields both count and bytes and warms the cache.
-    val maxBroadcastDocs = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(1L << 20)
-    val maxBroadcastBytes = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastBytes").map(_.toLong)
-      .getOrElse(128L << 20)
     val stats = docs.agg(count(lit(1)), coalesce(sum(col("n_chars")), lit(0L)))
       .head()
     val (nDocs, textBytes) = (stats.getLong(0), stats.getLong(1))
     val joined =
       // the +64/doc term charges the histogram column the build side now carries
       if (nDocs <= maxBroadcastDocs &&
-          3L * (textBytes + 64L * nDocs) <= maxBroadcastBytes)
+          3L * (textBytes + 64L * nDocs) <= MaxBroadcastBytes)
         left.as("a").join(broadcast(right.as("b")), cond)
       else {
         val sl = left.withColumn("salt", pmod(hash(col("doc_id")), lit(par)))
@@ -5153,14 +5123,10 @@ object DocQueries {
           explode(sequence(lit(0), lit(par - 1))))
         sl.as("a").join(sr.as("b"), cond && col("a.salt") === col("b.salt"))
       }
-    val banded = joined.filter(abs(col("a.n_chars") - col("b.n_chars")) <= k)
-    // sound prune before the DP: L1 > 2k pairs can never verify. The
-    // toggle exists for A/B measurement only — both settings produce
-    // identical rows (CharHistSpec pins the bound), measured at x16:
-    // see README's fuzzy section.
-    (if (histPruneOn(spark)) banded.filter(graft.functions.GraftFunctions
-       .histL1(col("a.h"), col("b.h")) <= 2 * k)
-     else banded)
+    // sound prune before the DP: L1 > 2k pairs can never verify (rows are
+    // unchanged — CharHistSpec pins the bound)
+    joined.filter(abs(col("a.n_chars") - col("b.n_chars")) <= k)
+      .filter(graft.functions.GraftFunctions.histL1(col("a.h"), col("b.h")) <= 2 * k)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         graft.functions.GraftFunctions
           .levenshteinBounded(col("a.text"), col("b.text"), k)
@@ -5215,7 +5181,7 @@ object DocQueries {
     * (lev >= |len diff|), and dropping them HERE — before the distinct and
     * the two text-fetch joins — cuts the dominant cost in hot LSH buckets,
     * where pair volume is quadratic in bucket size. */
-  private def fuzzyCandLsh(spark: SparkSession, d: String, k: Int): DataFrame = {
+  private def fuzzyCandLsh(spark: SparkSession, d: String): DataFrame = {
     val docs = documents(spark, d)
       .select(col("doc_id"), col("n_chars"),
         shinglesUdf(col("text")).as("sh"), minhashSigUdf(col("text")).as("sig"))
@@ -5224,7 +5190,7 @@ object DocQueries {
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id") &&
-          abs(col("a.n_chars") - col("b.n_chars")) <= k)
+          abs(col("a.n_chars") - col("b.n_chars")) <= FuzzyK)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
   }
 
@@ -5236,12 +5202,6 @@ object DocQueries {
     * knob here follows); the SQL oracle replays the same formula, and the
     * planted probe measures what the cap costs at the scale it binds. */
   private def cdcBlockCap(nDocs: Long): Long = math.max(64L, nDocs / 1024L)
-
-  /** The CharHist L1 prune is result-neutral (sound necessary condition,
-    * [[graft.functions.CharHist]]); this toggle exists so its cost/benefit
-    * stays A/B-measurable, not because any setting changes answers. */
-  private def histPruneOn(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.fuzzy.histPrune").forall(_.toBoolean)
 
   /** (doc_id, n_chars, chunk key) rows of the two-pass gear BLOCKING walk
     * ([[graft.functions.GearChunker.blockKeys]]) — keys are distinct per
@@ -5267,7 +5227,7 @@ object DocQueries {
     * exactly as on the LSH side. Indel robustness comes from the same
     * boundary locality: chunks outside an insertion/deletion's context
     * window keep their content and keys. */
-  private def fuzzyCandCdc(spark: SparkSession, d: String, k: Int): DataFrame = {
+  private def fuzzyCandCdc(spark: SparkSession, d: String): DataFrame = {
     val cap = cdcBlockCap(docCount(spark, d))
     val keys = cdcBlockKeys(spark, d)
     val kept = keys.groupBy(col("ck"))
@@ -5279,25 +5239,21 @@ object DocQueries {
     val kk = keys.join(kept, "ck")
     kk.as("a").join(kk.as("b"),
         col("a.ck") === col("b.ck") && col("a.doc_id") < col("b.doc_id") &&
-          abs(col("a.n_chars") - col("b.n_chars")) <= k)
+          abs(col("a.n_chars") - col("b.n_chars")) <= FuzzyK)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
   }
 
   /** Blocked pair table, memoized for the same reason as [[fuzzyDedup]]'s:
     * [[fuzzyRecall]] is a direct consumer (the recall numerator), so the
     * family materializes the verified pair table once per residency. */
-  def fuzzyDedupBlocked(spark: SparkSession, d: String): DataFrame = {
-    val k = spark.conf.getOption("spark.graft.fuzzy.maxDist").map(_.toInt).getOrElse(40)
-    MemoCache.getOrElseUpdate(spark,
-      ("fuzzy-blocked-pairs", d, k, histPruneOn(spark)))(
-      fuzzyDedupBlockedCompute(spark, d, k).cache())(_.unpersist(blocking = false))
-  }
+  def fuzzyDedupBlocked(spark: SparkSession, d: String): DataFrame =
+    MemoCache.getOrElseUpdate(spark, ("fuzzy-blocked-pairs", d))(
+      fuzzyDedupBlockedCompute(spark, d).cache())(_.unpersist(blocking = false))
 
-  private def fuzzyDedupBlockedCompute(spark: SparkSession, d: String, k: Int): DataFrame = {
+  private def fuzzyDedupBlockedCompute(spark: SparkSession, d: String): DataFrame = {
+    val k = FuzzyK
     val base = fuzzyDocs(spark, d)
-    val cand = fuzzyCandLsh(spark, d, k)
-      .union(fuzzyCandCdc(spark, d, k))
-      .distinct()
+    val cand = fuzzyCandLsh(spark, d).union(fuzzyCandCdc(spark, d)).distinct()
     // Sound pre-verify prune (see [[graft.functions.CharHist]]): L1 of the
     // 64-byte code-point histograms is <= 2 * lev, so `l1 > 2k` pairs can
     // never verify and are dropped BEFORE the text fetch — the candidate
@@ -5310,14 +5266,11 @@ object DocQueries {
     // candidate set and the DP only.
     val hists = base.select(col("doc_id"),
       graft.functions.GraftFunctions.charHist64(col("text")).as("h"))
-    val pruned =
-      if (!histPruneOn(spark)) cand
-      else cand
-        .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
-        .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
-        .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
-        .select(col("doc_a"), col("doc_b"))
-    pruned
+    cand
+      .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
+      .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
+      .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
+      .select(col("doc_a"), col("doc_b"))
       .join(base.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
       .join(base.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -5333,13 +5286,12 @@ object DocQueries {
     * logged" half of the scattered-recall fix. Probe-only (not in the
     * gate's query map). */
   private[graft] def fuzzyBlockedDiag(spark: SparkSession, d: String): DataFrame = {
-    val k = spark.conf.getOption("spark.graft.fuzzy.maxDist").map(_.toInt).getOrElse(40)
     val cap = cdcBlockCap(docCount(spark, d))
-    val lsh = fuzzyCandLsh(spark, d, k).distinct()
+    val lsh = fuzzyCandLsh(spark, d).distinct()
       .agg(count(lit(1)).cast("long").as("lsh_pairs"))
-    val cdc = fuzzyCandCdc(spark, d, k).distinct()
+    val cdc = fuzzyCandCdc(spark, d).distinct()
       .agg(count(lit(1)).cast("long").as("cdc_pairs"))
-    val uni = fuzzyCandLsh(spark, d, k).union(fuzzyCandCdc(spark, d, k))
+    val uni = fuzzyCandLsh(spark, d).union(fuzzyCandCdc(spark, d))
       .distinct().agg(count(lit(1)).cast("long").as("union_pairs"))
     val hot = cdcBlockKeys(spark, d).groupBy(col("ck"))
       .agg(count(lit(1)).as("df")).filter(col("df") > cap)
@@ -5349,11 +5301,11 @@ object DocQueries {
     // than a verify cost
     val hists = fuzzyDocs(spark, d).select(col("doc_id"),
       graft.functions.GraftFunctions.charHist64(col("text")).as("h"))
-    val survivors = fuzzyCandLsh(spark, d, k).union(fuzzyCandCdc(spark, d, k))
+    val survivors = fuzzyCandLsh(spark, d).union(fuzzyCandCdc(spark, d))
       .distinct()
       .join(hists.select(col("doc_id").as("doc_a"), col("h").as("ha")), "doc_a")
       .join(hists.select(col("doc_id").as("doc_b"), col("h").as("hb")), "doc_b")
-      .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * k)
+      .filter(graft.functions.GraftFunctions.histL1(col("ha"), col("hb")) <= 2 * FuzzyK)
       .agg(count(lit(1)).cast("long").as("l1_survivors"))
     lsh.crossJoin(cdc).crossJoin(uni).crossJoin(hot).crossJoin(survivors)
       .withColumn("cdc_cap", lit(cap))

@@ -500,6 +500,8 @@ object EmbeddingQueries {
 
   // ------------------------------------------------- linear probe training
   private val ProbeIters = 24
+  /** Training sets up to this many rows run the GD loop on the driver. */
+  private val ProbeMaxDriverRows = 1L << 20
 
   /** TRAIN a linear probe on the embeddings (one-vs-rest least squares for
     * label 0 via full-batch gradient descent) and score every vector — the
@@ -527,7 +529,11 @@ object EmbeddingQueries {
     * map-side into one 64-long array per partition, K scans over a cached
     * prepared dataset. At 100 TB you'd subsample or mini-batch; the plan
     * shape is unchanged. */
-  def linearProbe(spark: SparkSession, d: String): DataFrame = {
+  def linearProbe(spark: SparkSession, d: String): DataFrame =
+    linearProbeWith(spark, d, ProbeMaxDriverRows)
+
+  private[graft] def linearProbeWith(spark: SparkSession, d: String,
+                                     maxDriverRows: Long): DataFrame = {
     import spark.implicits._
     val MarginScale = 1000000000L // weight scale 1e6 x feature scale 1e3
     val prep = embeddings(spark, d)
@@ -556,15 +562,13 @@ object EmbeddingQueries {
       // the prep/count/norm/threshold jobs, not the loop). Above it, the
       // distributed loop: broadcast weights, map-side partial gradients.
       // IDENTICAL Long arithmetic either way, so the gate never changes
-      // results (DedupScaleSpec pins bit-parity on the oracled entry).
-      val gate = spark.conf.getOption("spark.graft.probe.maxDriverRows")
-        .map(_.toLong).getOrElse(1L << 20)
+      // results (DedupScaleSpec pins bit-parity on the two paths).
       var w = Array.fill(Dim)(0L)
       def step(w0: Array[Long], grad: Array[Long]): Array[Long] =
         // dw_real = grad_real / maxnorm2_real collapses to this all-integer
         // form (the 1e6 feature-square scale cancels the weight scale)
         Array.tabulate(Dim)(dd => w0(dd) - grad(dd) / (n * maxNorm2))
-      if (n <= gate) {
+      if (n <= maxDriverRows) {
         val local = prep.map { case (_, e, y) => (e, y) }.collect()
         for (_ <- 1 to ProbeIters) {
           val g = new Array[Long](Dim)
@@ -983,17 +987,17 @@ object EmbeddingQueries {
     * scale path is [[annLsh]]/[[annIvf]]; this is the exact baseline the
     * approximate variants are measured against. Scaled-integer math keeps
     * the oracle bit-stable. */
-  def neardupCosine(spark: SparkSession, d: String): DataFrame = {
+  def neardupCosine(spark: SparkSession, d: String): DataFrame =
+    neardupCosineWith(spark, d, DocQueries.MaxBroadcastDocs)
+
+  private[graft] def neardupCosineWith(spark: SparkSession, d: String,
+                                       maxBroadcastDocs: Long): DataFrame = {
     import spark.implicits._
     // Size gate, symmetric with neardupJaccardCompute's: a corpus within the
     // broadcast budget ships the whole scaled matrix once; beyond it the
     // blocked path broadcasts one row block at a time (nBlocks sized so each
     // block fits the same budget). Identical per-pair arithmetic either way,
-    // so the gate never changes results (DedupScaleSpec pins bit-parity on
-    // the oracled entry itself).
-    val maxBroadcastDocs = spark.conf
-      .getOption("spark.graft.dedup.maxBroadcastDocs").map(_.toLong)
-      .getOrElse(1L << 20)
+    // so the gate never changes results (DedupScaleSpec pins bit-parity).
     val e = embeddings(spark, d)
       .select(col("vec_id"), scaled(col("embedding")).as("emb"))
       .as[(Long, Array[Long])]
@@ -1772,7 +1776,15 @@ object EmbeddingQueries {
     * (k ≈ √n), the standard IVF/SemDeDup sizing. Cell assignment and pair
     * cosines reuse the integer-exact centroid/dot machinery of
     * [[annIvf]]. */
-  def semDedup(spark: SparkSession, d: String): DataFrame = {
+  def semDedup(spark: SparkSession, d: String): DataFrame =
+    semDedupWith(spark, d, SemDedupMaxLabelCellVecs)
+
+  /** Label cells up to this many vectors: n²/(2·10) pairs ≈ 840k at the
+    * boundary. */
+  private val SemDedupMaxLabelCellVecs = 1L << 12
+
+  private[graft] def semDedupWith(spark: SparkSession, d: String,
+                                  maxLabelCellVecs: Long): DataFrame = {
     // Label cells are a fixed-count partition (10 on the test tables), so
     // the within-cell pair pass grows as n²/10 — ScaleProbe measured the
     // x4→x16 step at 8.3x for 4x the vectors. Past the gate the operator
@@ -1787,9 +1799,6 @@ object EmbeddingQueries {
     // approximation, like annIvf's NProbe — changes to k-means; that
     // regime is pinned by DedupScaleSpec (gate-forced routing must equal
     // the direct k-means call bit-for-bit), not by the SQL oracle.
-    val maxLabelCellVecs = spark.conf
-      .getOption("spark.graft.dedup.maxLabelCellVecs").map(_.toLong)
-      .getOrElse(1L << 12) // n²/(2·10) pairs ≈ 840k at the boundary
     if (embeddingCount(spark, d) > maxLabelCellVecs)
       return semDedupKmeans(spark, d)
     val eRaw = embeddings(spark, d)
@@ -1810,9 +1819,7 @@ object EmbeddingQueries {
       .withColumn("norm2", dotScaled(col("emb"), col("emb")))
     val kk =
       if (k > 0) k
-      else spark.conf.getOption("spark.graft.dedup.semdedupK").map(_.toInt)
-        .getOrElse(math.max(KmK, math.ceil(math.sqrt(
-          embeddingCount(spark, d).toDouble)).toInt))
+      else math.max(KmK, math.ceil(math.sqrt(embeddingCount(spark, d).toDouble)).toInt)
     val cents = trainedCentroids(spark, d, kk, KmIters)
       .select(col("cluster").cast("long").as("cell"), col("cemb"))
       .withColumn("cnorm2", dotScaled(col("cemb"), col("cemb")))
@@ -2273,6 +2280,8 @@ object EmbeddingQueries {
     * re-walk nested arrays per element). Oracle: full greedy replay in a
     * recursive CTE with the argmax as a correlated ORDER BY/LIMIT 1, the
     * BPE-oracle pattern. */
+  private val MmrMaxDriverVectors = 1L << 17
+
   def mmrSelect(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val k = 10
@@ -2283,14 +2292,11 @@ object EmbeddingQueries {
     // Driver gate (the pagerank/cluster-resolver pattern): the greedy walk
     // is k sequential argmax ROUNDS — distributed, that is k full jobs of
     // per-round overhead for ~1e6 multiplies of actual arithmetic. A
-    // candidate set under `spark.graft.mmr.maxDriverVectors` collects once
+    // candidate set under [[MmrMaxDriverVectors]] collects once
     // and runs the identical integer greedy (same score, same
     // (score desc, vec_id) tie-break) on the driver; above the gate the
     // distributed loop below is unchanged.
-    val maxDriverVecs = spark.conf
-      .getOption("spark.graft.mmr.maxDriverVectors").map(_.toLong)
-      .getOrElse(1L << 17)
-    if (embeddingCount(spark, d) <= maxDriverVecs) {
+    if (embeddingCount(spark, d) <= MmrMaxDriverVectors) {
       val rows = e.filter(col("vec_id") >= NQueries)
         .select(col("vec_id"), col("emb"))
         .as[(Long, scala.collection.Seq[Long])].collect()
@@ -2442,6 +2448,15 @@ object EmbeddingQueries {
       .filter(col("rk") <= TopK)
       .select(col("q_id"), col("vec_id"), col("cosine"), col("rk"))
 
+  // Recall-first HNSW parameters, measured on the x16 scaled fixture (80k
+  // 64-dim near-random vectors, 16 shards — distance concentration makes
+  // this the HARD regime for graph ANN): (m=8, ef=64) read recall 0.62;
+  // (8, 256) 0.90; (16, 256) 1.00.
+  private val HnswShards = 16
+  private val HnswM = 16
+  private val HnswEfConstruction = 128
+  private val HnswEfSearch = 256
+
   /** The gathered per-shard candidates (q_id, vec_id) — the ONLY part of
     * the HNSW pipeline that is not SQL-expressible. Memoized: search,
     * rerank-oracle and recall views all consume the same gather. */
@@ -2453,16 +2468,7 @@ object EmbeddingQueries {
     // warehouse scale this is one graph per partition; the fixed default
     // keeps shard membership (and thus emitted candidates) deterministic
     // across hosts, which a defaultParallelism-derived count would not.
-    val shards = spark.conf.getOption("spark.graft.hnsw.shards").map(_.toInt).getOrElse(16)
-    // Recall-first defaults, measured on the x16 scaled fixture (80k
-    // 64-dim near-random vectors, 16 shards — distance concentration makes
-    // this the HARD regime for graph ANN): (m=8, ef=64) read recall 0.62;
-    // (8, 256) 0.90; (16, 256) 1.00. The knobs trade exactly as the paper
-    // says, so the defaults buy recall and the confs buy back speed.
-    val m = spark.conf.getOption("spark.graft.hnsw.m").map(_.toInt).getOrElse(16)
-    val efC = spark.conf.getOption("spark.graft.hnsw.efConstruction").map(_.toInt).getOrElse(128)
-    val efS = spark.conf.getOption("spark.graft.hnsw.efSearch").map(_.toInt).getOrElse(256)
-    MemoCache.getOrElseUpdate(spark, ("hnsw-cands", d, shards, m, efC, efS))({
+    MemoCache.getOrElseUpdate(spark, ("hnsw-cands", d))({
       val e = embeddings(spark, d)
       // NQueries probe rows to the driver — the broadcast-only-probes
       // pattern every index query here uses (gate: fixture contract).
@@ -2471,15 +2477,15 @@ object EmbeddingQueries {
       val qb = spark.sparkContext.broadcast(qRows)
       e.filter(col("vec_id") >= NQueries)
         .select(col("vec_id"), col("embedding"))
-        .repartition(shards, pmod(hash(col("vec_id")), lit(shards)))
+        .repartition(HnswShards, pmod(hash(col("vec_id")), lit(HnswShards)))
         .as[(Long, Array[Float])]
         .mapPartitions { it =>
           val nodes = it.toArray
           if (nodes.isEmpty) Iterator.empty
           else {
-            val g = graft.functions.Hnsw.build(nodes, m, efC)
+            val g = graft.functions.Hnsw.build(nodes, HnswM, HnswEfConstruction)
             qb.value.iterator.flatMap { case (qid, qv) =>
-              g.search(qv, efS, TopK).iterator.map { case (id, _) => (qid, id) }
+              g.search(qv, HnswEfSearch, TopK).iterator.map { case (id, _) => (qid, id) }
             }
           }
         }.toDF("q_id", "vec_id").cache()

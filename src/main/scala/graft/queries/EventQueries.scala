@@ -1782,8 +1782,13 @@ object EventQueries {
     * only driver-side scalar. */
   private val PrScale = 1000000000000L // 1e12: rank units
   private val PrIters = 10
+  private val PrMaxDriverEdges = 4L << 20
 
-  def pagerank(spark: SparkSession, d: String): DataFrame = {
+  def pagerank(spark: SparkSession, d: String): DataFrame =
+    pagerankWith(spark, d, PrMaxDriverEdges)
+
+  private[graft] def pagerankWith(spark: SparkSession, d: String,
+                                  maxDriverEdges: Long): DataFrame = {
     import spark.implicits._
     // The edge list IS the memoized collected transitions table the chain
     // solvers share — type-pair grain, model-sized by construction (the
@@ -1803,11 +1808,8 @@ object EventQueries {
     // Gate like the dedup cluster resolver: an edge list that fits the
     // driver iterates there (10 Spark jobs of per-round overhead dwarf the
     // arithmetic on graphs of type/page cardinality — measured 2.6s → 0.3s
-    // at sf0.1); past `spark.graft.pagerank.maxDriverEdges` the identical
-    // integer updates run distributed. Bit-parity is spec-pinned.
-    val maxDriverEdges = spark.conf
-      .getOption("spark.graft.pagerank.maxDriverEdges").map(_.toLong)
-      .getOrElse(4L << 20)
+    // at sf0.1); past `maxDriverEdges` the identical integer updates run
+    // distributed. Bit-parity is spec-pinned.
     val ranks: DataFrame = if (es.length <= maxDriverEdges) {
       val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
       var rank = ns.map(_ -> PrScale / n).toMap
@@ -2924,29 +2926,15 @@ object EventQueries {
         .agg(sum(col("v0")).as("sv"), first(col("L")).as("L"))
         .cache())(_.unpersist(blocking = false))
     // Empty-events guard: min() over an empty grid is NULL and getLong
-    // would NPE (the old join-based probe resolution degraded gracefully);
-    // an empty corpus has no probe user, so the result is simply no rows.
-    // Long.MinValue marks "no user" (ids are parquet longs; the fixture
-    // generator never emits it) so the CountMemo slot stays a plain long.
+    // would NPE. An empty corpus has no probe user: Long.MinValue marks
+    // "no user" (ids are parquet longs; the fixture generator never emits
+    // it), matches no grid row, and the pipeline below yields zero rows
+    // with its own schema.
     val qu = CountMemo.getOrCompute(spark, ("ts-qu", d))(
       grid.agg(min(col("user_id"))).head() match {
         case r if r.isNullAt(0) => Long.MinValue
         case r => r.getLong(0)
       })
-    if (qu == Long.MinValue)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sqdist",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lb_scaled",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lb_ok",
-            org.apache.spark.sql.types.BooleanType))))
     val qPaa = paa.filter(col("user_id") === qu)
       .select(col("seg"), col("sv").as("qsv"))
     val lb = paa.filter(col("user_id") =!= qu)
@@ -3041,7 +3029,7 @@ object EventQueries {
     // RAW scans (no fixture rebalance): each branch is one reductive
     // aggregation whose partial-agg collapses the stream before any
     // exchange, so the keyed rebalance was a pure extra full-table shuffle
-    // per branch — five of them. BenchOne A/B at sf0.1: 2.6 -> 1.3 s warm,
+    // per branch — five of them. Single-query A/B at sf0.1: 2.6 -> 1.3 s warm,
     // self-CPU 10.4 -> 4.8 s.
     one(eventsRaw(spark, d), "events", "user_id")
       .unionByName(one(eventsRaw(spark, d), "events", "event_type"))
@@ -4397,19 +4385,18 @@ object EventQueries {
 
   /** Bytes-gated broadcast for the catalog-keyed dim frames ([[itemSim]]'s
     * marginals, [[triangles]]' degree table): both are ≤ one fixed-width
-    * row per distinct item, so the gate is a row bound — default 2^22
-    * items ≈ 128 MB at ~32 B/row, the same budget the dedup family's
+    * row per distinct item, so the gate is a row bound — [[MaxBroadcastItems]]
+    * = 2^22 items ≈ 128 MB at ~32 B/row, the same budget the dedup family's
     * bytes gate uses. Under the bound the dim broadcasts (BHJ,
     * PlanSpec-asserted at fixture scale); above it the hint is dropped and
     * the join falls back to a shuffle on the item key — an item catalog
     * approaching driver memory at 100x must degrade to an exchange, not
     * OOM the driver (the un-gated `broadcast(...)` forced exactly that). */
   private def maybeBroadcastItemDim(spark: SparkSession, d: String,
-                                    dim: DataFrame): DataFrame = {
-    val maxItems = spark.conf.getOption("spark.graft.evt.maxBroadcastItems")
-      .map(_.toLong).getOrElse(1L << 22)
+                                    dim: DataFrame, maxItems: Long): DataFrame =
     if (cappedItemCount(spark, d) <= maxItems) broadcast(dim) else dim
-  }
+
+  private val MaxBroadcastItems = 1L << 22
 
   /** Matching SQL: `ui0`/`ui` CTEs, shared by both oracles. */
   private val cappedUiCtes: String =
@@ -4437,7 +4424,11 @@ object EventQueries {
         .cache()
     })(_.unpersist(blocking = false))
 
-  def itemSim(spark: SparkSession, d: String): DataFrame = {
+  def itemSim(spark: SparkSession, d: String): DataFrame =
+    itemSimWith(spark, d, MaxBroadcastItems)
+
+  private[graft] def itemSimWith(spark: SparkSession, d: String,
+                                 maxItems: Long): DataFrame = {
     val ui = cappedInteractions(spark, d)
     val marginals = ui.groupBy(col("item"))
       .agg(count(lit(1)).cast("long").as("n_users"))
@@ -4446,9 +4437,9 @@ object EventQueries {
       .union(pairs.select(col("j").as("i"), col("i").as("j"), col("cooc")))
     val scored = both
       .join(maybeBroadcastItemDim(spark, d,
-        marginals.select(col("item").as("i"), col("n_users").as("ni"))), "i")
+        marginals.select(col("item").as("i"), col("n_users").as("ni")), maxItems), "i")
       .join(maybeBroadcastItemDim(spark, d,
-        marginals.select(col("item").as("j"), col("n_users").as("nj"))), "j")
+        marginals.select(col("item").as("j"), col("n_users").as("nj")), maxItems), "j")
       .select(col("i").as("item"), col("j").as("sim_item"), col("cooc"),
         round(col("cooc").cast("double") /
           (sqrt(col("ni").cast("double")) * sqrt(col("nj").cast("double"))), 6)
@@ -4495,7 +4486,13 @@ object EventQueries {
     * of the orientation trick. */
   private val TriangleMinCoocPct = 25 // edge iff cooc*100 >= pct*n_users
 
-  def triangles(spark: SparkSession, d: String): DataFrame = {
+  def triangles(spark: SparkSession, d: String): DataFrame =
+    trianglesWith(spark, d, MaxBroadcastItems)
+
+  /** Both memo entries key on `maxItems`: the broadcast hints are inside
+    * them. */
+  private[graft] def trianglesWith(spark: SparkSession, d: String,
+                                   maxItems: Long): DataFrame = {
     val nUsers = cappedUserCount(spark, d)
     // undirected edge list (i < j), threshold relative to corpus size;
     // MemoCache-bounded like every reused intermediate (raw .cache()
@@ -4509,12 +4506,12 @@ object EventQueries {
     // fan-out below the pair exchange (guide §2.3 aggregate/filter before
     // you shuffle). itemSim's unfiltered [[coocPairs]] memo is untouched;
     // a triangles-only cold no longer pays the full catalog-pair build.
-    val edges = MemoCache.getOrElseUpdate(spark, ("tri-edges", d))({
+    val edges = MemoCache.getOrElseUpdate(spark, ("tri-edges", d, maxItems))({
       val ui = cappedInteractions(spark, d)
       val hot = ui.groupBy(col("item")).agg(count(lit(1)).as("nv"))
         .filter(col("nv") * 100 >= lit(TriangleMinCoocPct) * lit(nUsers))
         .select(col("item"))
-      val uiHot = ui.join(maybeBroadcastItemDim(spark, d, hot), "item")
+      val uiHot = ui.join(maybeBroadcastItemDim(spark, d, hot, maxItems), "item")
       uiHot.as("a")
         .join(uiHot.as("b"),
           col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
@@ -4529,9 +4526,9 @@ object EventQueries {
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     val oriented = edges
       .join(maybeBroadcastItemDim(spark, d,
-        deg.select(col("v").as("i"), col("deg").as("di"))), "i")
+        deg.select(col("v").as("i"), col("deg").as("di")), maxItems), "i")
       .join(maybeBroadcastItemDim(spark, d,
-        deg.select(col("v").as("j"), col("deg").as("dj"))), "j")
+        deg.select(col("v").as("j"), col("deg").as("dj")), maxItems), "j")
       .select(
         when(col("di") < col("dj") || (col("di") === col("dj") && col("i") < col("j")),
           col("i")).otherwise(col("j")).as("src"),
@@ -4544,7 +4541,7 @@ object EventQueries {
     // per-invocation cost once the edge table is memo-resident — memoize
     // the (item, n_triangles) credit table too (catalog-sized), same
     // policy as the pair tables.
-    val credit = MemoCache.getOrElseUpdate(spark, ("tri-credit", d))({
+    val credit = MemoCache.getOrElseUpdate(spark, ("tri-credit", d, maxItems))({
       val wedges = oriented.as("e1")
         .join(oriented.as("e2"),
           col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))

@@ -96,7 +96,7 @@ private[graft] object MemoCache {
   }
 
   /** Release + drop every entry of `spark` whose key matches — explicit
-    * invalidation for superseded config variants of the same dataset. */
+    * invalidation (the scale probes clear the store before each sample). */
   def evict(spark: SparkSession, matches: Any => Boolean): Unit = synchronized {
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
@@ -150,7 +150,7 @@ private[graft] object CountMemo {
   /** Drop cached counts whose key matches — REQUIRED whenever a dataset
     * dir is rewritten in-session (fixture regeneration, plant writes): a
     * stale count silently sizes posting caps, rerank pools and broadcast
-    * gates, and `MemoCache.evict` does not touch this store. */
+    * gates, and the MemoCache eviction does not touch this store. */
   def evict(matches: Any => Boolean): Unit =
     counts.keySet.removeIf(e => matches(e._2)): Unit
 }

@@ -797,7 +797,13 @@ object RelationalQueries {
     * sides already pruned, no sort, partition-local builds).
     * Profit = exact decimal revenue minus exact integer cost-cents,
     * subtracted in double only at the output edge. */
-  def q9(spark: SparkSession, d: String): DataFrame = {
+  /** Derived-partsupp rows up to which q9 broadcasts it. */
+  private val Q9MaxBroadcastRows = 4L << 20
+
+  def q9(spark: SparkSession, d: String): DataFrame = q9With(spark, d, Q9MaxBroadcastRows)
+
+  private[graft] def q9With(spark: SparkSession, d: String,
+                            maxPsBroadcastRows: Long): DataFrame = {
     val p = part(spark, d).filter(col("p_type") === "STANDARD").select("p_partkey")
     val s = supplier(spark, d).select("s_suppkey", "s_nationkey")
       .join(broadcast(nation(spark, d).select("n_nationkey", "n_name")),
@@ -813,9 +819,6 @@ object RelationalQueries {
     // partsupp is SF-sized — the shuffled hash join is the scale plan.
     val psRows = 4L * CountMemo.getOrCompute(spark, ("part-count", d))(
       part(spark, d).count())
-    val maxPsBroadcastRows = spark.conf
-      .getOption("spark.graft.relational.maxBroadcastRows").map(_.toLong)
-      .getOrElse(4L << 20)
     val psBase = partsupp(spark, d)
       .join(broadcast(p), col("ps_partkey") === col("p_partkey"))
       .select("ps_partkey", "ps_suppkey", "ps_supplycost_cents")

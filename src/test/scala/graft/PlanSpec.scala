@@ -542,25 +542,22 @@ class PlanSpec extends SparkSpec {
     // explode (GenerateExec) — must NEVER ride a BroadcastExchange (that
     // OOMs the driver at ~8B rows); the join degrades to the shuffled hash
     // join, and both physical forms produce identical rows.
-    spark.conf.set("spark.graft.relational.maxBroadcastRows", "0")
-    try {
-      val closed = RelationalQueries.q9(spark, sf)
-      val cn = planNodes(closed)
-      val broadcastsGenerate = cn.exists {
-        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-          subtree(b).exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
-        case _ => false
-      }
-      assert(!broadcastsGenerate,
-        "closed gate: partsupp must never be a broadcast build side")
-      assert(cn.exists(
-        _.isInstanceOf[org.apache.spark.sql.execution.joins.ShuffledHashJoinExec]),
-        "closed gate: fact x partsupp must be a shuffled hash join")
-      val open = df.collect().map(_.toString).sorted
-      val clos = closed.collect().map(_.toString).sorted
-      assert(open.sameElements(clos),
-        "gate setting must not change q9's rows")
-    } finally spark.conf.unset("spark.graft.relational.maxBroadcastRows")
+    val closed = RelationalQueries.q9With(spark, sf, maxPsBroadcastRows = 0)
+    val cn = planNodes(closed)
+    val broadcastsGenerate = cn.exists {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+        subtree(b).exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
+      case _ => false
+    }
+    assert(!broadcastsGenerate,
+      "closed gate: partsupp must never be a broadcast build side")
+    assert(cn.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.ShuffledHashJoinExec]),
+      "closed gate: fact x partsupp must be a shuffled hash join")
+    val open = df.collect().map(_.toString).sorted
+    val clos = closed.collect().map(_.toString).sorted
+    assert(open.sameElements(clos),
+      "gate setting must not change q9's rows")
   }
 
   test("q20: qualification ends in a semi-join; no cartesian") {
@@ -1068,28 +1065,24 @@ class PlanSpec extends SparkSpec {
     // memory). AQE may still locally convert a tiny side at runtime, so the
     // assertion targets the STATIC plan (pre-execution), where only our
     // explicit hint could have forced a broadcast.
-    spark.conf.set("spark.graft.evt.maxBroadcastItems", "0")
-    try {
-      for (q <- Seq("evt_item_sim", "evt_triangles")) {
-        val df = graft.queries.EventQueries.queries(q)(spark, sf)
-        val nodes = planNodes(df)
-        assert(!nodes.exists(
-          _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
-          s"$q: gated fallback must stay an equi-join")
-        assert(!nodes.exists(
-          _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
-          s"$q: gated fallback must not cartesian")
-        // rows must be identical in either physical form (same query, same
-        // memoized interaction set)
-        val gated = df.collect().map(_.toString).sorted
-        assert(gated.nonEmpty, s"$q under the closed gate must still compute")
-        spark.conf.unset("spark.graft.evt.maxBroadcastItems")
-        val open = graft.queries.EventQueries.queries(q)(spark, sf)
-          .collect().map(_.toString).sorted
-        spark.conf.set("spark.graft.evt.maxBroadcastItems", "0")
-        assert(gated.toSeq === open.toSeq,
-          s"$q: gate-open and gate-closed plans must produce identical rows")
-      }
-    } finally spark.conf.unset("spark.graft.evt.maxBroadcastItems")
+    import graft.queries.EventQueries
+    for ((q, closedGate) <- Seq("evt_item_sim" -> (EventQueries.itemSimWith _),
+                                "evt_triangles" -> (EventQueries.trianglesWith _))) {
+      val df = closedGate(spark, sf, 0L)
+      val nodes = planNodes(df)
+      assert(!nodes.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
+        s"$q: gated fallback must stay an equi-join")
+      assert(!nodes.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
+        s"$q: gated fallback must not cartesian")
+      // rows must be identical in either physical form (same query, same
+      // memoized interaction set)
+      val gated = df.collect().map(_.toString).sorted
+      assert(gated.nonEmpty, s"$q under the closed gate must still compute")
+      val open = EventQueries.queries(q)(spark, sf).collect().map(_.toString).sorted
+      assert(gated.toSeq === open.toSeq,
+        s"$q: gate-open and gate-closed plans must produce identical rows")
+    }
   }
 }

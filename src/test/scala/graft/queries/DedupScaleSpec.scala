@@ -5,25 +5,19 @@ import org.apache.spark.sql.functions._
 
 /** The scale gates of the dedup/LM family: each driver-collect small-data
   * path has a distributed twin behind a size gate, and forcing the gate
-  * must reproduce the small-path output bit-for-bit. */
+  * (through the builder that takes the threshold) must reproduce the
+  * small-path output bit-for-bit. */
 class DedupScaleSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.01"
   private val sfSmall = "/root/testdata/sf0.001"
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    spark.conf.set(key, value)
-    try body finally spark.conf.unset(key)
-  }
-
   test("distributed Jaccard verify matches the broadcast merge-walk bit-for-bit") {
     import spark.implicits._
     val viaBroadcast = DocQueries.neardupJaccard(spark, sf)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val viaJoin = withConf("spark.graft.dedup.maxBroadcastDocs", "0") {
-      DocQueries.neardupJaccardCompute(spark, sf)
-        .as[(Long, Long, Long, Double)].collect().toSet
-    }
+    val viaJoin = DocQueries.neardupJaccardCompute(spark, sf, maxDocs = 0)
+      .as[(Long, Long, Long, Double)].collect().toSet
     assert(viaBroadcast.nonEmpty)
     assert(viaJoin === viaBroadcast) // doubles exact: same int-exact division
   }
@@ -32,10 +26,8 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val viaDriver = DocQueries.dedupClusters(spark, sf)
       .as[(Long, Long, Boolean)].collect().toSet
-    val viaComponents = withConf("spark.graft.dedup.maxDriverPairs", "0") {
-      DocQueries.dedupClusters(spark, sf)
-        .as[(Long, Long, Boolean)].collect().toSet
-    }
+    val viaComponents = DocQueries.dedupClustersWith(spark, sf, maxDriverPairs = 0)
+      .as[(Long, Long, Boolean)].collect().toSet
     assert(viaDriver.exists(_._3)) // the fixture does contain duplicates
     assert(viaComponents === viaDriver)
   }
@@ -44,10 +36,8 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val full = DocQueries.unigramLm(spark, sfSmall)
       .as[(Long, Int, Option[Double])].collect().toMap2
-    val capped = withConf("spark.graft.lm.vocabCap", "2") {
-      DocQueries.unigramLm(spark, sfSmall)
-        .as[(Long, Int, Option[Double])].collect().toMap2
-    }
+    val capped = DocQueries.unigramLmCapped(spark, sfSmall, cap = 2)
+      .as[(Long, Int, Option[Double])].collect().toMap2
     assert(capped.keySet === full.keySet)
     assert(capped != full) // the cap actually bound (vocab >> 2)
     // independent reference: rebuild the capped model in the test and fold
@@ -74,14 +64,10 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val full = DocQueries.importance(spark, sfSmall)
       .as[(Long, Int, Option[Double])].collect().toSet
-    val capped = withConf("spark.graft.lm.vocabCap", "2") {
-      DocQueries.importance(spark, sfSmall)
-        .as[(Long, Int, Option[Double])].collect().toSet
-    }
-    val big = withConf("spark.graft.lm.vocabCap", Int.MaxValue.toString) {
-      DocQueries.importance(spark, sfSmall)
-        .as[(Long, Int, Option[Double])].collect().toSet
-    }
+    val capped = DocQueries.importanceCapped(spark, sfSmall, cap = 2)
+      .as[(Long, Int, Option[Double])].collect().toSet
+    val big = DocQueries.importanceCapped(spark, sfSmall, cap = Int.MaxValue)
+      .as[(Long, Int, Option[Double])].collect().toSet
     assert(capped.map(_._1) === full.map(_._1))
     assert(capped != full)  // binding cap changes scores
     assert(big === full)     // non-binding cap is a no-op
@@ -101,12 +87,10 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val baseline = EmbeddingQueries.neardupCosine(spark, sfSmall)
       .as[(Long, Long, Double)].collect().toSet
-    // a 100-doc budget forces nBlocks = ceil(corpus/100) > 1 on the SAME
-    // public entry point the oracle runs — not just the private blocked fn
-    val gated = withConf("spark.graft.dedup.maxBroadcastDocs", "100") {
-      EmbeddingQueries.neardupCosine(spark, sfSmall)
-        .as[(Long, Long, Double)].collect().toSet
-    }
+    // a 100-doc budget forces nBlocks = ceil(corpus/100) > 1 through the
+    // SAME gate the oracled entry runs — not just the private blocked fn
+    val gated = EmbeddingQueries.neardupCosineWith(spark, sfSmall, maxBroadcastDocs = 100)
+      .as[(Long, Long, Double)].collect().toSet
     assert(baseline.nonEmpty)
     assert(gated === baseline)
   }
@@ -115,10 +99,8 @@ class DedupScaleSpec extends SparkSpec {
     import spark.implicits._
     val viaDriver = EmbeddingQueries.linearProbe(spark, sfSmall)
       .as[(Long, Int, Double, Boolean)].collect().toSet
-    val viaDistributed = withConf("spark.graft.probe.maxDriverRows", "0") {
-      EmbeddingQueries.linearProbe(spark, sfSmall)
-        .as[(Long, Int, Double, Boolean)].collect().toSet
-    }
+    val viaDistributed = EmbeddingQueries.linearProbeWith(spark, sfSmall, maxDriverRows = 0)
+      .as[(Long, Int, Double, Boolean)].collect().toSet
     assert(viaDriver.nonEmpty)
     assert(viaDriver.exists(_._4), "the probe must predict some positives")
     assert(viaDistributed === viaDriver)
@@ -186,12 +168,10 @@ class DedupScaleSpec extends SparkSpec {
 
   test("semDedup routes to k-means cells past the label-cell gate") {
     import spark.implicits._
-    // forcing the gate on the oracled entry itself must reproduce the
-    // direct k-means-cell call exactly (same cells, same flags)
-    val gated = withConf("spark.graft.dedup.maxLabelCellVecs", "0") {
-      EmbeddingQueries.semDedup(spark, sfSmall)
-        .as[(Long, Long, Boolean, Option[Long])].collect().toSet
-    }
+    // forcing the oracled entry's gate must reproduce the direct
+    // k-means-cell call exactly (same cells, same flags)
+    val gated = EmbeddingQueries.semDedupWith(spark, sfSmall, maxLabelCellVecs = 0)
+      .as[(Long, Long, Boolean, Option[Long])].collect().toSet
     val direct = EmbeddingQueries.semDedupKmeans(spark, sfSmall)
       .as[(Long, Long, Boolean, Option[Long])].collect().toSet
     assert(gated === direct)

@@ -3,10 +3,10 @@ package graft.queries
 import graft.SparkSpec
 import org.apache.spark.storage.StorageLevel
 
-/** The bounded memo store: sweeping more (dataset, config) keys than the
-  * cap must evict the least-recently-used entries AND free their
-  * cluster-side storage, while results stay bit-identical before/after
-  * eviction (an evicted intermediate recomputes; it never changes). */
+/** The bounded memo store: inserting more keys than the cap must evict the
+  * least-recently-used entries AND free their cluster-side storage, while
+  * results stay bit-identical before/after eviction (an evicted
+  * intermediate recomputes; it never changes). */
 class MemoCacheSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.01"
@@ -27,17 +27,13 @@ class MemoCacheSpec extends SparkSpec {
     val pairsDf = DocQueries.scoredPairs(spark, sf)
     assert(pairsDf.storageLevel !== StorageLevel.NONE,
       "memoized pair table must be Spark-cached while resident")
-    // sweep more model keys than the cap (default 8) — each distinct
-    // vocabCap is a fresh (dataset, cap) entry, pushing the pair table
-    // (oldest, never re-accessed) out of the LRU
-    val lmBaseline = withConf("spark.graft.lm.vocabCap", "1") {
-      DocQueries.unigramLm(spark, sfSmall)
-        .as[(Long, Int, Option[Double])].collect().toSet
-    }
-    (2 to 10).foreach { cap =>
-      withConf("spark.graft.lm.vocabCap", cap.toString) {
-        DocQueries.unigramLm(spark, sfSmall).queryExecution.toRdd.count()
-      }
+    // a broadcast-backed entry (the LM model) built BEFORE the sweep
+    val lmDf = DocQueries.unigramLm(spark, sfSmall)
+    val lmBaseline = lmDf.as[(Long, Int, Option[Double])].collect().toSet
+    // insert more fresh keys than the cap (default 8), pushing the pair
+    // table and the LM model (oldest, never re-accessed) out of the LRU
+    (1 to 9).foreach { i =>
+      MemoCache.getOrElseUpdate(spark, ("memo-spec-fill", i))(i)(_ => ())
     }
     assert(MemoCache.size <= 8, s"cache must stay bounded, got ${MemoCache.size}")
     assert(pairsDf.storageLevel === StorageLevel.NONE,
@@ -49,10 +45,7 @@ class MemoCacheSpec extends SparkSpec {
     // an evicted BROADCAST entry's old handle also still works (eviction
     // unpersists executor copies; the driver copy re-ships on demand) —
     // the race-safety contract that lets eviction run under live queries
-    val lmAgain = withConf("spark.graft.lm.vocabCap", "1") {
-      DocQueries.unigramLm(spark, sfSmall)
-        .as[(Long, Int, Option[Double])].collect().toSet
-    }
+    val lmAgain = lmDf.as[(Long, Int, Option[Double])].collect().toSet
     assert(lmAgain === lmBaseline)
   }
 

@@ -119,13 +119,10 @@ class PipelineSpec extends SparkSpec {
     assert(pr.values.sum <= 1000000000000L)
     assert(pr.values.sum > 300000000000L, "most mass should survive 10 rounds")
     // driver-loop vs distributed path bit-parity: force the gate shut
-    spark.conf.set("spark.graft.pagerank.maxDriverEdges", "0")
-    try {
-      val dist = EventQueries.pagerank(spark, tmp)
-        .select("event_type", "rank_scaled")
-        .as[(String, Long)].collect().toMap
-      assert(dist === pr, "distributed updates must reproduce the driver loop exactly")
-    } finally spark.conf.unset("spark.graft.pagerank.maxDriverEdges")
+    val dist = EventQueries.pagerankWith(spark, tmp, maxDriverEdges = 0)
+      .select("event_type", "rank_scaled")
+      .as[(String, Long)].collect().toMap
+    assert(dist === pr, "distributed updates must reproduce the driver loop exactly")
   }
 
   test("textrank: hub word of a planted lexical star outranks leaves; " +
@@ -146,12 +143,9 @@ class PipelineSpec extends SparkSpec {
     assert((0 until 8).map(i => tr(s"l$i")).toSet.size === 1,
       "symmetric leaves must tie exactly")
     assert(tr.values.sum <= 1000000000000L, "damped update never grows mass")
-    spark.conf.set("spark.graft.textrank.maxDriverEdges", "0")
-    try {
-      val dist = DocQueries.queries("doc_textrank")(spark, tmp)
-        .select("word", "rank_scaled").as[(String, Long)].collect().toMap
-      assert(dist === tr, "distributed updates must reproduce the driver loop")
-    } finally spark.conf.unset("spark.graft.textrank.maxDriverEdges")
+    val dist = DocQueries.textrankWith(spark, tmp, maxDriverEdges = 0)
+      .select("word", "rank_scaled").as[(String, Long)].collect().toMap
+    assert(dist === tr, "distributed updates must reproduce the driver loop")
   }
 
   test("incremental sessionization equals the full recompute at every cutoff") {
@@ -1206,12 +1200,9 @@ class PipelineSpec extends SparkSpec {
     // apple/banana idf 2000, cherry/mango 4000: dot 8e6 over norms
     // sqrt(24e6) each -> exactly 1/3
     assert(capped.head._3 === 0.333333)
-    spark.conf.set("spark.graft.tfidf.dfCapFrac", "0")
-    try {
-      val uncapped = DocQueries.tfidfKnn(spark, tmp)
-        .select("doc_id").as[Long].collect().toSet
-      assert(uncapped === Set(7L, 11L, 12L))
-    } finally spark.conf.unset("spark.graft.tfidf.dfCapFrac")
+    val uncapped = DocQueries.tfidfKnnWith(spark, tmp, capFrac = 0)
+      .select("doc_id").as[Long].collect().toSet
+    assert(uncapped === Set(7L, 11L, 12L))
   }
 
   test("tfidf df cap degeneracy gate: a tiny-vocab corpus where capping " +
@@ -1466,34 +1457,23 @@ class PipelineSpec extends SparkSpec {
       }
     }
 
-    spark.conf.set("spark.graft.bpe.merges", "10")
-    try {
-      val got = DocQueries.bpeTrain(spark, tmp)
+    def train(maxDriverVocab: Long) =
+      DocQueries.bpeTrainWith(spark, tmp, merges = 10, maxDriverVocab)
         .orderBy("rank").select("left", "right", "pair_count")
         .as[(String, String, Long)].collect().toSeq
-      assert(got === expected.toSeq)
-      // force the big-vocab distributed loop (gate 0) — must produce the
-      // IDENTICAL merge table; a fresh temp dir defeats the model cache
-      val tmp2 = java.nio.file.Files.createTempDirectory("bpe2").toString
-      Seq((1L, text, "en", "web", text.length.toLong))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$tmp2/documents.parquet")
-      spark.conf.set("spark.graft.bpe.maxDriverVocab", "0")
-      try {
-        val dist = DocQueries.bpeTrain(spark, tmp2)
-          .orderBy("rank").select("left", "right", "pair_count")
-          .as[(String, String, Long)].collect().toSeq
-        assert(dist === expected.toSeq, "distributed path diverged from driver path")
-      } finally spark.conf.unset("spark.graft.bpe.maxDriverVocab")
-      // encode round-trip on the same model: symbols reconstruct each word
-      val rank = got.zipWithIndex.map { case ((l, r, _), i) => (l, r) -> i }.toMap
-      words.foreach { case (w, _) =>
-        val syms = Bpe.encodeWord(w, rank)
-        assert(syms.mkString.stripSuffix(Bpe.EndOfWord) === w)
-      }
-      // the most frequent pair merged first: "es" from newest (6) + widest (3)
-      assert(got.head._3 === 9L)
-    } finally spark.conf.unset("spark.graft.bpe.merges")
+    val got = train(Long.MaxValue) // driver loop
+    assert(got === expected.toSeq)
+    // force the big-vocab distributed loop (gate 0) — must produce the
+    // IDENTICAL merge table (the merge memo keys on the gate)
+    assert(train(0L) === expected.toSeq, "distributed path diverged from driver path")
+    // encode round-trip on the same model: symbols reconstruct each word
+    val rank = got.zipWithIndex.map { case ((l, r, _), i) => (l, r) -> i }.toMap
+    words.foreach { case (w, _) =>
+      val syms = Bpe.encodeWord(w, rank)
+      assert(syms.mkString.stripSuffix(Bpe.EndOfWord) === w)
+    }
+    // the most frequent pair merged first: "es" from newest (6) + widest (3)
+    assert(got.head._3 === 9L)
   }
 
   test("BPE encoding merges by rank priority, not text order") {
@@ -2156,13 +2136,10 @@ class PipelineSpec extends SparkSpec {
        "bit-identical to the broadcast path") {
     val viaBroadcast = DocQueries.fuzzyDedup(spark, sf)
       .as[(Long, Long, Long)].collect().toSet
-    spark.conf.set("spark.graft.dedup.maxBroadcastDocs", "1")
-    try {
-      val viaSalt = DocQueries.fuzzyDedup(spark, sf)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(viaSalt === viaBroadcast,
-        "hash(doc_id)-salted probe x replicated build must meet every pair exactly once")
-    } finally spark.conf.unset("spark.graft.dedup.maxBroadcastDocs")
+    val viaSalt = DocQueries.fuzzyDedupCompute(spark, sf, maxBroadcastDocs = 1)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(viaSalt === viaBroadcast,
+      "hash(doc_id)-salted probe x replicated build must meet every pair exactly once")
   }
 
   test("cdc merge: tombstones delete, latest change wins, snapshot survives") {
@@ -2669,6 +2646,16 @@ class PipelineSpec extends SparkSpec {
     val full = graft.queries.EventQueries.queries("evt_ts_search")(spark, sf)
       .collect()
     assert(full.forall(_.getAs[Boolean]("lb_ok")))
+  }
+
+  test("ts search: an empty corpus yields zero rows with the real schema") {
+    val tmp = java.nio.file.Files.createTempDirectory("tsempty").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    val empty = graft.queries.EventQueries.queries("evt_ts_search")(spark, tmp)
+    assert(empty.collect().isEmpty)
+    assert(empty.schema ===
+      graft.queries.EventQueries.queries("evt_ts_search")(spark, sf).schema)
   }
 
   test("scene cuts: golden rows hand-computed OUTSIDE both engines") {
