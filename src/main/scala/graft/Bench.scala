@@ -7,70 +7,22 @@ import BenchSampler.{Sample, gcCount, gcMillis, loadAvg}
 
 object Bench {
 
+  /** Retry budget shared by a run's in-loop retimes of dirty warm samples. */
+  private val RetryBudgetMs = 300L * 1000L
+  /** Budget of the end-of-run retime pass over still-dirty samples. */
+  private val EorBudgetMs = 180L * 1000L
+
   private def jstr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val wallStart = System.nanoTime()
-    // Load gate for the IDLE-RECORD run (r11 demerit #1: the one artifact
-    // whose job is round-over-round comparability ran under 16 dirty colds
-    // of host contention and polluted the comparison). When
-    // SPARK_GRAFT_MAX_LOADAVG is set, poll the 1-min loadavg up to
-    // SPARK_GRAFT_LOAD_WAIT seconds (default 600) for it to fall below the
-    // threshold; on timeout REFUSE (exit 2) unless
-    // SPARK_GRAFT_LOAD_ANNOTATE=1, in which case the run proceeds and the
-    // artifact carries the loud over-threshold annotation. Driver runs
-    // leave the knob unset and are unaffected.
-    def load1(): Double =
-      try loadAvg().split(",")(0).toDouble catch { case _: Throwable => -1.0 }
-    val loadGateJson = sys.env.get("SPARK_GRAFT_MAX_LOADAVG").map(_.toDouble) match {
-      case None => s""""load_gate":"off""""
-      case Some(th) =>
-        // Two stacked criteria, both must pass within the shared wait
-        // budget: (1) 1-min loadavg below the threshold — catches
-        // same-kernel co-tenants; (2) a direct CPU-acquisition probe
-        // ([[BenchSampler.cpuAcquisitionFrac]]) above MIN_CPUFRAC —
-        // catches hypervisor steal, which loadavg passed right through
-        // on this artifact's first r12 attempt (gate read 3.0, then 32
-        // colds went dirty with task-CPU fractions down to 0.43).
-        val minFrac = sys.env.getOrElse("SPARK_GRAFT_MIN_CPUFRAC", "0.85").toDouble
-        val waitSec = sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT", "600").toLong
-        val deadline = System.nanoTime() + waitSec * 1000000000L
-        var l = load1()
-        var frac = -2.0 // not yet probed
-        var waitedSec = 0L
-        def healthy(): Boolean = {
-          if (l > th) return false
-          frac = BenchSampler.cpuAcquisitionFrac(cpus, 2000)
-          frac < 0 || frac >= minFrac // unsupported counters: loadavg-only
-        }
-        while (!healthy() && System.nanoTime() < deadline) {
-          System.err.println(f"[bench] load gate: loadavg $l%.1f (th $th%.1f), " +
-            f"cpu acquisition $frac%.2f (min $minFrac%.2f), waiting...")
-          Thread.sleep(30000)
-          waitedSec += 30
-          l = load1()
-        }
-        val passed = l <= th && (frac < 0 || frac >= minFrac)
-        if (!passed && sys.env.get("SPARK_GRAFT_LOAD_ANNOTATE").isEmpty) {
-          println(s"""{"refused":"load gate: loadavg $l (th $th), cpu acquisition $frac (min $minFrac) after ${waitedSec}s wait","unit":"sec"}""")
-          sys.exit(2)
-        }
-        f""""load_gate":{"threshold":$th%.1f,"loadavg_at_gate":$l%.2f,""" +
-          f""""cpu_acq_frac":$frac%.3f,"min_cpu_acq_frac":$minFrac%.2f,""" +
-          f""""waited_sec":$waitedSec,"passed":$passed}"""
-    }
     val loadStart = loadAvg()
-    val spark = GraftSession.build(cpus, "graft-bench")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-bench")
     BenchSampler.install(spark)
-    // experiment knob: measure AQE's per-query replan overhead on tiny data
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.enabled", v))
     // A/B experiments on Spark confs without recompiling:
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — dev-only, the driver never sets it.
-    // (Time one query with SPARK_GRAFT_ONLY='^name$'.)
+    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" (e.g. spark.sql.adaptive.enabled=false).
     // The applied string is stamped into the artifact (extra_conf below) so
     // an A/B run stays distinguishable from a clean run when re-adjudicated
     // offline.
@@ -79,7 +31,11 @@ object Bench {
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     // Evidence of where shuffle/spill land and whether that disk has headroom:
     // a bench run against a nearly-full or slow scratch dir is not comparable.
-    val localDir = spark.conf.getOption("spark.local.dir")
+    // SPARK_LOCAL_DIRS overrides spark.local.dir, so its first entry is the
+    // directory Spark actually writes to when it is set.
+    val localDir = sys.env.get("SPARK_LOCAL_DIRS").map(_.split(",")(0).trim)
+      .filter(_.nonEmpty)
+      .orElse(spark.conf.getOption("spark.local.dir"))
       .orElse(sys.props.get("java.io.tmpdir")).getOrElse("/tmp")
     // getUsableSpace returns 0 for a path that does not exist YET (Spark
     // creates its scratch subdir lazily) — walk up to the nearest existing
@@ -135,16 +91,12 @@ object Bench {
       // would let Catalyst prune the projections under narrow queries and
       // time an empty scan instead of the actual operator work.
       fn(spark, sfDir).queryExecution.toRdd.count(): Unit
-    val extThreshold = sys.env.getOrElse("SPARK_GRAFT_EXT_THRESHOLD", "0.15").toDouble
-    val minRetimeSec = 0.3
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_MAX_RETRIES", "3").toInt
     // global retry budget (ms) bounds the run under sustained contention
-    val retryBudget = new AtomicLong(
-      sys.env.getOrElse("SPARK_GRAFT_RETRY_BUDGET", "300").toLong * 1000L)
+    val retryBudget = new AtomicLong(RetryBudgetMs)
     val gcStartMs = gcMillis()
     var qIdx = 0
-    // Dev-only subset knob (the driver never sets it): regex over names —
-    // lets a single query be timed in bench shape (toRdd.count, warm JVM).
+    // Subset regex over names — lets a single query be timed in bench
+    // shape (toRdd.count, warm JVM): SPARK_GRAFT_ONLY='^name$'.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     final case class Q(cold: Sample, coldReasons: Seq[String], warm: Sample,
         retries: Int, reasons: Seq[String], eorRetimed: Boolean = false,
@@ -176,11 +128,10 @@ object Bench {
       // the gc-fraction criterion (r11 demerit #2: a 23.6 s cold with gc at
       // 22% of wall — 7x its idle counterpart — passed the ext/stall checks
       // and escaped adjudication with no floor).
-      val coldReasons = BenchSampler.coldDirtyReasons(cold, extThreshold, minRetimeSec)
+      val coldReasons = BenchSampler.coldDirtyReasons(cold)
       val (warm, retries, reasons) =
         if (cold.wall < 0) (cold, 0, Seq("failed"))
-        else BenchSampler.steady(hostCores, extThreshold, minRetimeSec,
-          maxRetries, retryBudget)(run(fn))
+        else BenchSampler.steady(hostCores, retryBudget)(run(fn))
       // live progress on stderr: localizes any whole-JVM degradation to the
       // point in the run where it starts (the final JSON only shows totals)
       System.err.println(f"[bench] $name cold=${cold.wall}%.2f warm=${warm.wall}%.2f " +
@@ -198,8 +149,7 @@ object Bench {
     // fastest wall (contention only ever inflates), and stamp the entry as
     // end-of-run-retimed either way so the artifact shows every dirty
     // sample got its late second chance.
-    val eorBudget = new AtomicLong(
-      sys.env.getOrElse("SPARK_GRAFT_EOR_BUDGET", "180").toLong * 1000L)
+    val eorBudget = new AtomicLong(EorBudgetMs)
     val results = firstPass.map { case (name, q) =>
       val needWarm = q.reasons.nonEmpty && q.cold.wall >= 0
       // A dirty cold also earns a late re-execution. Its wall is NOT
@@ -216,8 +166,8 @@ object Bench {
           // chargeInitial: steady() debits every sample it times, including
           // the first — the caller-side debit that double-charged retry
           // samples is gone.
-          val (s, r, rs) = BenchSampler.steady(hostCores, extThreshold,
-            minRetimeSec, maxRetries, eorBudget, chargeInitial = true)(run(fn))
+          val (s, r, rs) = BenchSampler.steady(hostCores, eorBudget,
+            chargeInitial = true)(run(fn))
           // q.warm.wall < 0 (the first-pass warm FAILED): any successful
           // retime sample wins — the old strict `<` comparison kept the
           // failed -1 forever.
@@ -239,7 +189,7 @@ object Bench {
           // cold-only dirty: one charged re-execution for the floor
           val s = BenchSampler.sample(hostCores)(run(fn))
           eorBudget.addAndGet(-math.max(0L, (s.wall * 1000).toLong))
-          val crr = BenchSampler.dirtyReasons(s, extThreshold, minRetimeSec)
+          val crr = BenchSampler.dirtyReasons(s)
           System.err.println(f"[bench] $name EOR cold floor: cold=${q.cold.wall}%.2f" +
             f" floor=${s.wall}%.2f" +
             (if (crr.nonEmpty) s" still-dirty=${crr.mkString("+")}" else " clean"))
@@ -334,7 +284,6 @@ object Bench {
       s""""n_contaminated":$nDirty""",
       s""""n_cold_contaminated":$nColdDirty""",
       s""""retry_budget_left_ms":${retryBudget.get()}""",
-      loadGateJson,
       s""""extra_conf":${extraConf.map(jstr).getOrElse("null")}""",
       s""""local_dir":${jstr(localDir)}""",
       s""""local_dir_free_bytes":$localFree""",

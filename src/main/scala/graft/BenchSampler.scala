@@ -59,8 +59,16 @@ object BenchSampler {
     def gcStorm: Boolean = wall > 0 && gcMs > (wall * 500).toLong // >50% of wall in GC
   }
 
+  /** External busy-core fraction above which a sample is dirty ("ext"). */
+  private val ExtThreshold = 0.15
+  /** Walls below this are too short for contention to matter: never dirty. */
+  private val MinRetimeSec = 0.3
+  /** Re-samples [[steady]] takes of one dirty measurement at most. */
+  private val MaxRetries = 3
+
   /** Why a sample was judged non-steady-state; empty = clean. */
-  def dirtyReasons(s: Sample, extThreshold: Double, minWall: Double): Seq[String] = {
+  def dirtyReasons(s: Sample, extThreshold: Double = ExtThreshold,
+                   minWall: Double = MinRetimeSec): Seq[String] = {
     if (s.wall < 0) return Seq("failed") // query threw: never report clean
     if (s.wall < minWall) return Seq.empty // too short for contention to matter
     val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -93,7 +101,8 @@ object BenchSampler {
     * here just earns its end-of-run floor. The 1 s wall floor keeps
     * sub-second colds (where a single young-gen pause is a large
     * fraction) out of the net. */
-  def coldDirtyReasons(s: Sample, extThreshold: Double, minWall: Double): Seq[String] = {
+  def coldDirtyReasons(s: Sample, extThreshold: Double = ExtThreshold,
+                       minWall: Double = MinRetimeSec): Seq[String] = {
     val base = dirtyReasons(s, extThreshold, minWall)
     val b2 =
       if (s.wall >= 1.0 && !s.gcStorm && s.gcMs > (s.wall * 150).toLong)
@@ -153,53 +162,6 @@ object BenchSampler {
       case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
       case _ => -1L
     }
-
-  /** Direct CPU-acquisition probe: spin `threads` always-runnable busy
-    * loops for `wallMs`, and return the fraction of `wallMs * threads` the
-    * threads actually acquired as CPU time (ThreadMXBean per-thread
-    * counters). On a healthy idle host this reads ~0.95+; hypervisor-level
-    * steal — which loadavg and /proc/stat CANNOT see (the r8 lesson) and
-    * which contaminated BENCH_LOCAL_r12's first attempt (loadavg gate
-    * passed at 1-min 3.0, then 32 colds went dirty with task-CPU
-    * fractions down to 0.43) — drags it down because runnable threads
-    * don't get scheduled onto a physical core. Frequency throttling does
-    * NOT lower it (a slow cycle still accrues CPU time), which is the
-    * right behavior: the gate's job is catching time-sliced contention
-    * that breaks wall-clock comparability, not grading the silicon. */
-  def cpuAcquisitionFrac(threads: Int, wallMs: Long): Double = {
-    val tmx = ManagementFactory.getThreadMXBean
-    if (!tmx.isThreadCpuTimeSupported) return -1.0
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val cpuNs = new AtomicLong(0L)
-    val ts = (0 until threads).map { _ =>
-      new Thread(() => {
-        val self = Thread.currentThread().getId
-        var sink = 0L // defeat loop elision; published via the sink check below
-        var base = 0L // CPU already accrued when the timed window arms
-        var counted = false
-        while (!stop.get()) {
-          var i = 0; while (i < 4096) { sink += i * 31; i += 1 }
-          if (!counted && armed.get()) { base = tmx.getThreadCpuTime(self); counted = true }
-        }
-        if (sink == Long.MinValue) println(sink) // never true; keeps sink live
-        val t = tmx.getThreadCpuTime(self)
-        if (counted && t > base) cpuNs.addAndGet(t - base): Unit
-      })
-    }
-    ts.foreach { t => t.setDaemon(true); t.start() }
-    // untimed warmup: let the spin loop JIT-compile before the measured
-    // window, else the probe's own first-call compile time reads as ~5%
-    // phantom steal (measured 0.886 first call vs 0.930 second, idle host)
-    Thread.sleep(200)
-    armed.set(true)
-    val t0 = System.nanoTime()
-    Thread.sleep(wallMs)
-    stop.set(true)
-    ts.foreach(_.join(wallMs)) // bounded: a starved join is itself evidence
-    val wallNs = System.nanoTime() - t0
-    cpuNs.get.toDouble / (wallNs.toDouble * threads)
-  }
 
   // ------------------------------------------------------------- listener
 
@@ -286,21 +248,20 @@ object BenchSampler {
     * end-of-run retime pass), so every timed second there is charged
     * exactly once; the first-pass call leaves it false because its initial
     * sample is the mandatory warm measurement, not budgeted retry work. */
-  def steady(hostCores: Int, extThreshold: Double, minWall: Double,
-             maxRetries: Int, budget: AtomicLong,
+  def steady(hostCores: Int, budget: AtomicLong,
              chargeInitial: Boolean = false)(work: => Unit)
       : (Sample, Int, Seq[String]) = {
     var best = sample(hostCores)(work)
     if (chargeInitial) budget.addAndGet(-math.max(0L, (best.wall * 1000).toLong))
-    var reasons = dirtyReasons(best, extThreshold, minWall)
+    var reasons = dirtyReasons(best)
     var retries = 0
-    while (best.wall >= 0 && reasons.nonEmpty && retries < maxRetries &&
+    while (best.wall >= 0 && reasons.nonEmpty && retries < MaxRetries &&
            budget.get() > 0) {
       retries += 1
       val s = sample(hostCores)(work)
       budget.addAndGet(-math.max(0L, (s.wall * 1000).toLong))
       if (s.wall >= 0 && s.wall < best.wall) best = s
-      reasons = dirtyReasons(best, extThreshold, minWall)
+      reasons = dirtyReasons(best)
     }
     (best, retries, reasons)
   }

@@ -68,8 +68,7 @@ object CorpusPipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-corpus")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-corpus")
     val counts = run(spark, sfDir, outDir)
     counts.foreach { case (s, n) => println(f"[corpus] $s%-18s $n%8d rows") }
     val doc = counts.dropRight(1).map(_._2)

@@ -12,13 +12,18 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local cores every main runs on: `SPARK_GRAFT_CPUS` when set (the
+    * driver runs with 32 and with 8), else the cores this JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Ephemeral-scratch directory for shuffle blocks and spills: prefer RAM-
     * backed /dev/shm when present, writable, AND with generous free
     * headroom (shuffle blocks are ephemeral by contract — executor loss
     * already invalidates them, so tmpfs loses nothing), else fall back to
     * the JVM temp dir. `SPARK_LOCAL_DIRS` (the cluster-operator knob)
-    * overrides the conf this feeds, per Spark's documented precedence, and
-    * `SPARK_GRAFT_TMPFS=0|1` forces the choice either way.
+    * overrides the conf this feeds, per Spark's documented precedence, so
+    * when it is set neither /dev/shm nor its sweep is touched.
     *
     * Caveats the gate addresses: tmpfs pages compete with the heap for the
     * same RAM (and /dev/shm is typically capped at 50% of it), so spills
@@ -31,12 +36,8 @@ object GraftSession {
   private def scratchDir(): String = {
     val user = sys.env.getOrElse("USER", "anon")
     val shm = new java.io.File("/dev/shm")
-    val useShm = sys.env.get("SPARK_GRAFT_TMPFS") match {
-      case Some("1") => shm.isDirectory && shm.canWrite
-      case Some("0") => false
-      case _ => shm.isDirectory && shm.canWrite &&
-        shm.getUsableSpace >= TmpfsMinFreeBytes
-    }
+    val useShm = !sys.env.contains("SPARK_LOCAL_DIRS") &&
+      shm.isDirectory && shm.canWrite && shm.getUsableSpace >= TmpfsMinFreeBytes
     if (useShm) {
       sweepDeadScratch(shm, user)
       s"/dev/shm/graft-scratch-$user-${ProcessHandle.current().pid()}"

@@ -25,7 +25,7 @@ object MappingDevTool {
         new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(args(1).drop(1))), "UTF-8").trim
       else args.drop(1).mkString(" ")
-    val spark = GraftSession.build(2, "graft-mapping-dev")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-mapping-dev")
     import spark.implicits._
     if (mode == "encode") {
       // JSON -> mincode (the wire payload the browser tag would send as u=)

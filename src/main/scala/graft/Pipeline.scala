@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-pipeline")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-pipeline")
 
     // 1. decode browser wire events (synthesized from the events table) and
     //    flag duplicates with the slot memory

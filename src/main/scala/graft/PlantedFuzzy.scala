@@ -57,6 +57,9 @@ object PlantedFuzzy {
     * regime, 21-40 the intentionally-missed tail. */
   val EditBuckets: Seq[Int] = Seq(1, 2, 4, 8, 16, 24, 32, 40)
 
+  /** Retry budget for re-timing a dirty blocked-dedup sample. */
+  private val RetryBudgetMs = 600L * 1000L
+
   /** Deterministic `e` single-character substitutions at distinct
     * non-whitespace positions; md5-derived positions/letters (no RNG —
     * same reproducibility posture as the Hnsw level derivation). Length
@@ -217,15 +220,13 @@ object PlantedFuzzy {
     val srcDir = if (args.length > 0) args(0) else "/tmp/graft-scale/x256"
     val outDir = if (args.length > 1) args(1) else srcDir + "-planted"
     val everyN = if (args.length > 2) args(2).toLong else 64L
-    val spark = GraftSession.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-plant")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-plant")
     spark.range(1000).selectExpr("sum(id)").collect()
     plantDocuments(spark, srcDir, outDir, everyN)
     System.gc() // fixture-write debris must not charge the first sample
     BenchSampler.install(spark)
     val hostCores = Runtime.getRuntime.availableProcessors
-    val budget = new java.util.concurrent.atomic.AtomicLong(
-      sys.env.getOrElse("SPARK_GRAFT_RETRY_BUDGET", "600").toLong * 1000L)
+    val budget = new java.util.concurrent.atomic.AtomicLong(RetryBudgetMs)
     // the probe protocol: evict the query-layer memo before every sample
     // so the timing measures compute growth, not cache reads
     def once(): Unit = {
@@ -234,8 +235,7 @@ object PlantedFuzzy {
         .queryExecution.toRdd.count(): Unit
     }
     once() // cold: plan + codegen
-    val (s, retries, reasons) = BenchSampler.steady(hostCores,
-      extThreshold = 0.15, minWall = 0.3, maxRetries = 3, budget)(once())
+    val (s, retries, reasons) = BenchSampler.steady(hostCores, budget)(once())
     val buckets = measure(spark, outDir).collect()
     val nDocs = spark.read.parquet(s"$outDir/documents.parquet").count()
     // candidate-volume log: what each blocker contributes and what the

@@ -67,8 +67,7 @@ object PrefixFixture {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/tmp/graft-scale/x256"
     val outDir = if (args.length > 1) args(1) else srcDir + "-mat"
-    val spark = GraftSession.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-prefix-fixture")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-prefix-fixture")
     spark.range(1000).selectExpr("sum(id)").collect()
     writeConcentrated(spark, srcDir, outDir)
     val nVecs = spark.read.parquet(s"$outDir/embeddings.parquet").count()

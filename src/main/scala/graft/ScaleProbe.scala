@@ -28,6 +28,9 @@ object ScaleProbe {
     .map(_.split(",").map(_.trim.toInt).toSeq)
     .getOrElse(Seq(1, 4, 16))
 
+  /** Retry budget for re-timing dirty samples across the whole sweep. */
+  private val RetryBudgetMs = 600L * 1000L
+
   /** Replicate `df` k-fold. Long id columns in `remap` become
     * `id + maxId * rep` (unique per replica, originals preserved at rep 0);
     * `perturb` rewrites replica rows so content-keyed operators (dedup)
@@ -255,8 +258,7 @@ object ScaleProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1)
       else sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-scale"
-    val spark = GraftSession.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-scale")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-scale")
     spark.range(1000).selectExpr("sum(id)").collect()
     val dirs = Factors.map(k => k -> writeScaled(spark, sfDir, outDir, k)).toMap
     // The fixture-write phase (first run only) leaves shuffle files,
@@ -271,8 +273,7 @@ object ScaleProbe {
     // noise and needed manual re-probing when the host was contended.
     BenchSampler.install(spark)
     val hostCores = Runtime.getRuntime.availableProcessors
-    val retryBudget = new java.util.concurrent.atomic.AtomicLong(
-      sys.env.getOrElse("SPARK_GRAFT_RETRY_BUDGET", "600").toLong * 1000L)
+    val retryBudget = new java.util.concurrent.atomic.AtomicLong(RetryBudgetMs)
     // Every sample EVICTS the query-layer memo store first: several
     // operators memoize their expensive intermediates (minhash pair table,
     // setsim shingle/pair tables, TF-IDF index), which is the right serving
@@ -291,8 +292,7 @@ object ScaleProbe {
         fn(spark, dir).queryExecution.toRdd.count(): Unit
       }
       once() // cold: plan+codegen
-      BenchSampler.steady(hostCores, extThreshold = 0.15, minWall = 0.3,
-        maxRetries = 3, budget = retryBudget)(once())
+      BenchSampler.steady(hostCores, retryBudget)(once())
     }
     val kLo = Factors.min
     val kHi = Factors.max

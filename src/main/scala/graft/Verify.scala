@@ -6,10 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.build(cpus, "graft-verify")
+    val spark = GraftSession.build(GraftSession.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset knob (the driver never sets it): regex over query names.
+    // Subset regex over query names (SPARK_GRAFT_ONLY='^doc_').
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     // Sorted order: deterministic, and memo-sharing families (doc_tfidf_*,
     // doc_setsim_*, …) run adjacently so a shared index survives the

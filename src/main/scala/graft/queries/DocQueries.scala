@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.queries.EventQueries.{RankIters, RankScale}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -4280,21 +4281,18 @@ object DocQueries {
     * heuristic: a word ranks high when its NEIGHBORS rank high, which
     * separates connective hub words from merely frequent ones.
     *
-    * Same integer-exact iteration scheme as the event-graph pagerank
-    * (`EventQueries.pagerank`): ranks in units of 1e-12 (`TrScale`), 10
-    * rounds of `base + 85·Σ(rank(src) DIV ow(src))·w DIV 100` — every op a
-    * long, so both engines iterate bit-identically and the oracle is a
-    * recursive-CTE replay, not an epsilon compare.
+    * Same integer-exact rank fixpoint as the event-graph pagerank
+    * ([[EventQueries.integerRanks]]): every op a long, so both engines
+    * iterate bit-identically and the oracle is a recursive-CTE replay, not
+    * an epsilon compare.
     *
     * Scale: the word graph is vocabulary-sized — tiny next to the corpus at
     * any scale (Heaps' law) — so after one map-side-combinable adjacency
     * aggregation the rank loop runs on model-sized tables; below
-    * [[TrMaxDriverEdges]] it iterates on the driver (10
-    * distributed rounds of per-job overhead dwarf arithmetic on a vocab
-    * graph), above it the identical updates run as joins, checkpointed per
-    * round to keep lineage flat. */
-  private val TrScale = 1000000000000L
-  private val TrIters = 10
+    * [[TrMaxDriverEdges]] the edges are collected and it iterates on the
+    * driver (10 distributed rounds of per-job overhead dwarf arithmetic on
+    * a vocab graph), above it the identical updates run as joins,
+    * checkpointed per round to keep lineage flat. */
   private val TrMaxDriverEdges = 4L << 20
 
   def textrank(spark: SparkSession, d: String): DataFrame =
@@ -4335,30 +4333,14 @@ object DocQueries {
     })({ case (e, nd, _, _) =>
       e.unpersist(blocking = false); nd.unpersist(blocking = false); ()
     })
-    if (n == 0) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "word STRING, rank_scaled BIGINT, rank DOUBLE"))
-    }
-    val base = 15L * TrScale / (100L * n)
     val ranks: DataFrame = if (nEdges <= maxDriverEdges) {
-      val es = edges.as[(String, String, Long)].collect()
-      val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
-      val ns = nodes.as[String].collect()
-      var rank = ns.map(_ -> TrScale / n).toMap
-      for (_ <- 1 to TrIters) {
-        val sc = collection.mutable.Map.empty[String, Long]
-        es.foreach { case (s, t2, w) =>
-          sc(t2) = sc.getOrElse(t2, 0L) + rank(s) / ow(s) * w
-        }
-        rank = ns.map(v => v -> (base + 85L * sc.getOrElse(v, 0L) / 100L)).toMap
-      }
-      ns.map(v => (v, rank(v))).toSeq.toDF("node", "rank")
+      EventQueries.integerRanks(nodes.as[String].collect(),
+        edges.as[(String, String, Long)].collect()).toSeq.toDF("node", "rank")
     } else {
+      val base = 15L * RankScale / (100L * n) // n > 0: there are edges
       val outw = edges.groupBy(col("src")).agg(sum(col("wt")).as("ow"))
-      var r = nodes.withColumn("rank", lit(TrScale / n))
-      for (_ <- 1 to TrIters) {
+      var r = nodes.withColumn("rank", lit(RankScale / n))
+      for (_ <- 1 to RankIters) {
         val contribs = edges.join(outw, "src")
           .join(r.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node"),
@@ -4373,7 +4355,7 @@ object DocQueries {
       r
     }
     ranks.select(col("node").as("word"), col("rank").as("rank_scaled"),
-      (col("rank").cast("double") / TrScale).as("rank"))
+      (col("rank").cast("double") / RankScale).as("rank"))
   }
 
   /** Recursive-CTE replay over the word graph — the same state-as-list
@@ -4396,18 +4378,18 @@ object DocQueries {
        |            FROM edges JOIN outw USING (src)),
        | nl AS (SELECT list(node ORDER BY node) AS ns FROM nodes),
        | pr(it, rl) AS (
-       |   SELECT 0, list_transform(ns, x -> $TrScale // n) FROM nl, nn
+       |   SELECT 0, list_transform(ns, x -> $RankScale // n) FROM nl, nn
        |   UNION ALL
        |   SELECT it + 1, list_transform(ns, v ->
-       |       (15 * $TrScale) // (100 * n) +
+       |       (15 * $RankScale) // (100 * n) +
        |       (85 * COALESCE(CAST(list_sum(list_transform(es, e ->
        |          CASE WHEN e.dst = v
        |               THEN (rl[list_position(ns, e.src)] // e.ow) * e.w
        |               ELSE 0 END)) AS BIGINT), 0)) // 100)
-       |   FROM pr, packed, nl, nn WHERE it < $TrIters),
+       |   FROM pr, packed, nl, nn WHERE it < $RankIters),
        | f AS (SELECT rl FROM pr ORDER BY it DESC LIMIT 1)
        |SELECT ns[i] AS word, rl[i] AS rank_scaled,
-       |  CAST(rl[i] AS DOUBLE) / $TrScale AS rank
+       |  CAST(rl[i] AS DOUBLE) / $RankScale AS rank
        |FROM f, nl,
        |  (SELECT unnest(generate_series(1, (SELECT CAST(n AS INT) FROM nn))) AS i)""".stripMargin
 

@@ -1762,89 +1762,52 @@ object EventQueries {
 
   // ------------------------------------------------------------ pagerank
   /** Weighted PageRank over the click-transition graph (damping 0.85,
-    * [[PrIters]] fixed iterations) — the classic "which page/state matters"
-    * ranking over exactly the flow graph [[transitions]] counts.
+    * [[RankIters]] fixed iterations) — the classic "which page/state
+    * matters" ranking over exactly the flow graph [[transitions]] counts.
     *
-    * Determinism: ranks live as longs in 1e-12 units and every step is
-    * integer arithmetic — per-edge contribution `(rank DIV out_weight) * w`
-    * and the damped update `base + (85 * Σ) DIV 100` — so iteration order
-    * and float summation never matter and the whole 10-round fixpoint
-    * hash-checks against a DuckDB recursive-CTE replay. (Truncating DIV
-    * before the multiply keeps every intermediate within long range no
-    * matter how large the edge weights grow; dangling-node mass leaks, the
-    * standard simplification.)
-    *
-    * Scale: nodes and edges are DataFrames keyed on the node id — each
-    * iteration is one src-key join (rank table vs edges) + one
-    * map-side-combinable sum per dst, the textbook distributed PageRank;
-    * nothing assumes the node set fits anywhere. `localCheckpoint` cuts
-    * the 10-iteration lineage like the BPE trainer. The node COUNT is the
-    * only driver-side scalar. */
-  private val PrScale = 1000000000000L // 1e12: rank units
-  private val PrIters = 10
-  private val PrMaxDriverEdges = 4L << 20
-
-  def pagerank(spark: SparkSession, d: String): DataFrame =
-    pagerankWith(spark, d, PrMaxDriverEdges)
-
-  private[graft] def pagerankWith(spark: SparkSession, d: String,
-                                  maxDriverEdges: Long): DataFrame = {
+    * Scale: the edge list IS the memoized collected transitions table the
+    * chain solvers share — type-pair grain, model-sized by construction
+    * (the same argument that lets those solvers collect it
+    * unconditionally) — so the rank loop is pure driver arithmetic
+    * ([[integerRanks]]) with no Spark job of its own. */
+  def pagerank(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    // The edge list IS the memoized collected transitions table the chain
-    // solvers share — type-pair grain, model-sized by construction (the
-    // same argument that lets those solvers collect it unconditionally).
-    // Reading the memo replaces the per-invocation cache+count+distinct+
-    // two-collect chain (five jobs) with pure driver arithmetic.
     val es = transitionsCollected(spark, d)
     val ns = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-    val n = ns.length.toLong
-    if (n == 0) { // no transitions at all: empty result, not a crash
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_type STRING, rank_scaled BIGINT, rank DOUBLE"))
-    }
-    val base = 15L * PrScale / (100L * n) // floor; all positive
-    // Gate like the dedup cluster resolver: an edge list that fits the
-    // driver iterates there (10 Spark jobs of per-round overhead dwarf the
-    // arithmetic on graphs of type/page cardinality — measured 2.6s → 0.3s
-    // at sf0.1); past `maxDriverEdges` the identical integer updates run
-    // distributed. Bit-parity is spec-pinned.
-    val ranks: DataFrame = if (es.length <= maxDriverEdges) {
-      val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
-      var rank = ns.map(_ -> PrScale / n).toMap
-      for (_ <- 1 to PrIters) {
-        val sc = collection.mutable.Map.empty[String, Long]
-        es.foreach { case (s, t, w) =>
-          sc(t) = sc.getOrElse(t, 0L) + rank(s) / ow(s) * w
-        }
-        rank = ns.map(v => v -> (base + 85L * sc.getOrElse(v, 0L) / 100L)).toMap
+    integerRanks(ns, es).toSeq.toDF("node", "rank")
+      .select(col("node").as("event_type"), col("rank").as("rank_scaled"),
+        (col("rank").cast("double") / RankScale).as("rank"))
+  }
+
+  /** Rank units of [[integerRanks]] (1e-12) and its fixed round count. */
+  private[queries] final val RankScale = 1000000000000L
+  private[queries] final val RankIters = 10
+
+  /** The integer-exact damped rank fixpoint of [[pagerank]] and
+    * `DocQueries.textrank`, on the driver. Ranks are longs in
+    * [[RankScale]] units, start at `RankScale / n`, and take
+    * [[RankIters]] rounds of `base + (85 * Σ (rank(src) DIV ow(src)) * w)
+    * DIV 100` with `base = 15 * RankScale DIV (100 * n)`. Every step is
+    * integer arithmetic, so iteration order and float summation never
+    * matter and the fixpoint hash-checks against a DuckDB recursive-CTE
+    * replay. (Truncating DIV before the multiply keeps every intermediate
+    * within long range however large the edge weights grow;
+    * dangling-node mass leaks, the standard simplification.) Zero nodes
+    * yield zero ranks. */
+  private[queries] def integerRanks(ns: Array[String],
+      es: Array[(String, String, Long)]): Array[(String, Long)] = {
+    val n = math.max(ns.length.toLong, 1L)
+    val base = 15L * RankScale / (100L * n) // floor; all positive
+    val ow = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._3).sum }
+    var rank = ns.map(_ -> RankScale / n).toMap
+    for (_ <- 1 to RankIters) {
+      val sc = collection.mutable.Map.empty[String, Long]
+      es.foreach { case (s, t, w) =>
+        sc(t) = sc.getOrElse(t, 0L) + rank(s) / ow(s) * w
       }
-      ns.map(v => (v, rank(v))).toSeq.toDF("node", "rank")
-    } else {
-      val edges = transitions(spark, d)
-        .select(col("event_type").as("src"), col("next_type").as("dst"),
-          col("n_transitions").as("w"))
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-      val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      var r = nodes.withColumn("rank", lit(PrScale / n))
-      for (_ <- 1 to PrIters) {
-        val contribs = edges.join(outw, "src")
-          .join(r.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node"),
-            (expr("rank DIV ow") * col("w")).as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-        r = nodes.join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) DIV 100"))
-              .as("rank"))
-          .localCheckpoint()
-      }
-      r
+      rank = ns.map(v => v -> (base + 85L * sc.getOrElse(v, 0L) / 100L)).toMap
     }
-    ranks.select(col("node").as("event_type"), col("rank").as("rank_scaled"),
-      (col("rank").cast("double") / PrScale).as("rank"))
+    ns.map(v => v -> rank(v))
   }
 
   /** Recursive-CTE replay: the rank vector rides as a list over the sorted
@@ -1869,18 +1832,18 @@ object EventQueries {
        |            FROM edges JOIN outw USING (src)),
        | nl AS (SELECT list(node ORDER BY node) AS ns FROM nodes),
        | pr(it, rl) AS (
-       |   SELECT 0, list_transform(ns, x -> $PrScale // n) FROM nl, nn
+       |   SELECT 0, list_transform(ns, x -> $RankScale // n) FROM nl, nn
        |   UNION ALL
        |   SELECT it + 1, list_transform(ns, v ->
-       |       (15 * $PrScale) // (100 * n) +
+       |       (15 * $RankScale) // (100 * n) +
        |       (85 * COALESCE(CAST(list_sum(list_transform(es, e ->
        |          CASE WHEN e.dst = v
        |               THEN (rl[list_position(ns, e.src)] // e.ow) * e.w
        |               ELSE 0 END)) AS BIGINT), 0)) // 100)
-       |   FROM pr, packed, nl, nn WHERE it < $PrIters),
+       |   FROM pr, packed, nl, nn WHERE it < $RankIters),
        | f AS (SELECT rl FROM pr ORDER BY it DESC LIMIT 1)
        |SELECT ns[i] AS event_type, rl[i] AS rank_scaled,
-       |  CAST(rl[i] AS DOUBLE) / $PrScale AS rank
+       |  CAST(rl[i] AS DOUBLE) / $RankScale AS rank
        |FROM f, nl,
        |  (SELECT unnest(generate_series(1, (SELECT CAST(n AS INT) FROM nn))) AS i)""".stripMargin
 

@@ -118,11 +118,6 @@ class PipelineSpec extends SparkSpec {
     // redistributes or leaks (floor division + dangling loss), never grows
     assert(pr.values.sum <= 1000000000000L)
     assert(pr.values.sum > 300000000000L, "most mass should survive 10 rounds")
-    // driver-loop vs distributed path bit-parity: force the gate shut
-    val dist = EventQueries.pagerankWith(spark, tmp, maxDriverEdges = 0)
-      .select("event_type", "rank_scaled")
-      .as[(String, Long)].collect().toMap
-    assert(dist === pr, "distributed updates must reproduce the driver loop exactly")
   }
 
   test("textrank: hub word of a planted lexical star outranks leaves; " +
@@ -2649,13 +2644,26 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("ts search: an empty corpus yields zero rows with the real schema") {
-    val tmp = java.nio.file.Files.createTempDirectory("tsempty").toString
-    spark.read.parquet(s"$sf/events.parquet").limit(0)
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val empty = graft.queries.EventQueries.queries("evt_ts_search")(spark, tmp)
+    assertEmptyKeepsSchema("evt_ts_search", "events")
+  }
+
+  /** Run `name` over a zero-row copy of sf0.001's `table`: no rows, and
+    * the schema (nullability included) the sf0.001 result has. */
+  private def assertEmptyKeepsSchema(name: String, table: String): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"${name}_empty").toString
+    spark.read.parquet(s"$sf/$table.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$tmp/$table.parquet")
+    val empty = graft.SparkEntry.queries(name)(spark, tmp)
     assert(empty.collect().isEmpty)
-    assert(empty.schema ===
-      graft.queries.EventQueries.queries("evt_ts_search")(spark, sf).schema)
+    assert(empty.schema === graft.SparkEntry.queries(name)(spark, sf).schema)
+  }
+
+  test("pagerank: no events yields zero rows with the real schema") {
+    assertEmptyKeepsSchema("evt_pagerank", "events")
+  }
+
+  test("textrank: an empty corpus yields zero rows with the real schema") {
+    assertEmptyKeepsSchema("doc_textrank", "documents")
   }
 
   test("scene cuts: golden rows hand-computed OUTSIDE both engines") {
